@@ -152,34 +152,17 @@ def brute_force_topk(
     )
 
 
-def dot_quantized(a: Column, b: Column, scale: float = 1e12) -> Column:
-    """Integer-quantized dot product: every per-dim product is floored
-    to an integer (one fixed IEEE expression per element — identical
-    on any engine), and integer sums are associative, so nearest-
-    centroid comparisons over this score can never flip with
-    aggregation order. With unit-ish embeddings and 64 dims the score
-    is bounded by ~64 * scale/4, far inside int64 at scale 1e12."""
-    prods = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(
-            x.cast("double") * y.cast("double") * F.lit(float(scale))
-            + F.lit(0.5)
-        ),
-    )
-    return F.aggregate(
-        prods, F.lit(0).cast("bigint"), lambda acc, x: acc + x.cast("bigint")
-    )
-
-
 def _np_quantized_scores(X, C, scale: float):
-    """numpy replica of dot_quantized pairwise: s[i, j] =
-    sum_d floor((X[i,d] * C[j,d]) * scale + 0.5) as int64 — the SAME
-    float64 multiply order and floor as the column expression, so
-    every comparison built on these scores is bit-identical to the
-    HOF form (each per-dim product is < 2^53, exactly representable;
-    int64 sums are associative).  Chunked over both axes so the
-    B x k x d intermediate stays ~tens of MB."""
+    """Integer-quantized pairwise dot products: s[i, j] =
+    sum_d floor((X[i,d] * C[j,d]) * scale + 0.5) as int64.  Every
+    per-dim product is floored to an integer (one fixed IEEE float64
+    expression per element, < 2^53 so exactly representable) and int64
+    sums are associative, so nearest-centroid comparisons over this
+    score can never flip with summation order — the same expression
+    the DuckDB oracle SQL evaluates.  With unit-ish embeddings and 64
+    dims the score is bounded by ~64 * scale/4, far inside int64 at
+    scale 1e12.  Chunked over both axes so the B x k x d intermediate
+    stays ~tens of MB."""
     import numpy as np
 
     out = np.empty((len(X), len(C)), dtype=np.int64)
@@ -196,7 +179,8 @@ def _np_quantized_scores(X, C, scale: float):
 
 
 def _np_self_scores(X, scale: float):
-    """dot_quantized(x, x) per row, same exactness contract."""
+    """Quantized self dot product x.x per row, same exactness
+    contract as _np_quantized_scores."""
     import numpy as np
 
     prods = np.floor((X * X) * scale + 0.5)
@@ -210,100 +194,61 @@ def kmeans_assign(
     vec_col: str = "embedding",
     centroid_id_col: str = "cid",
     score_scale: float = 1e12,
-    batch_score: bool = False,
 ) -> DataFrame:
     """Lloyd assignment step with a deterministic argmax: nearest
     centroid in L2 via the identity argmin|x-c|^2 = argmax(2*x.c -
-    |c|^2), both terms integer-quantized; ties break toward the
-    smallest centroid id. A raw dot product would be wrong here: the
-    mean centroids kmeans_update produces are NOT unit-norm, and dot
-    biases assignment toward large-norm centroids (dot is only a
-    nearest-neighbor order for normalized vectors, as in ivf_assign's
-    cosine setting). Centroids broadcast; scoring is map-side —
-    identical shuffle shape to ivf_assign (one hash agg on id).
+    |c|^2), both terms integer-quantized (_np_quantized_scores); ties
+    break toward the smallest centroid id. A raw dot product would be
+    wrong here: the mean centroids kmeans_update produces are NOT
+    unit-norm, and dot biases assignment toward large-norm centroids
+    (dot is only a nearest-neighbor order for normalized vectors, as
+    in ivf_assign's cosine setting).
 
-    ``batch_score=True`` swaps the crossJoin + struct-max for ONE
-    Arrow-batched numpy pass (_np_quantized_scores — bit-identical
-    integer scores, argmax ties to the smaller cid exactly like the
-    struct form) that also carries every corpus column through, so
-    the id-join disappears: zero exchanges instead of one corpus
-    shuffle.  The interpreted HOF crossJoin is the k x dims cost the
-    seeding pitfall measured in minutes (SCALE.md wave 16) — the
-    batch path is the shape for codebook-scale k.  Requires non-NULL
-    vectors (the build/seeding callers already filter; the default
-    path keeps the legacy NULL semantics)."""
-    if batch_score:
-        import numpy as np
+    The centroids are collected to the driver (a model, never
+    data-sized) and scored in ONE Arrow-batched numpy pass that
+    carries every corpus column through: zero exchanges, no id-join.
+    Output is the corpus columns plus ``centroid_id_col``, typed as
+    in ``centroids``.
 
-        crows = sorted(
-            (
-                (int(r[centroid_id_col]),
-                 [float(v) for v in r[vec_col]])
-                for r in centroids.collect()
-            ),
-            key=lambda t: t[0],
-        )
-        cids_np = np.asarray([c0 for c0, _ in crows], dtype=np.int64)
-        C = np.asarray([v for _, v in crows], dtype=np.float64)
-        cc = _np_self_scores(C, score_scale)
-        out_schema = T.StructType(
-            list(corpus.schema)
-            + [T.StructField(centroid_id_col, T.IntegerType())]
-        )
-        cols = corpus.columns
+    Rows whose vector is NULL are DROPPED — a null vector has no
+    nearest centroid — the same contract as ``ivf_assign``.  ``id_col``
+    is unused: the assignment is row-at-a-time and never groups on it."""
+    import numpy as np
 
-        def assign(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in pdf[vec_col]
-                    ]
-                )
-                s = 2 * _np_quantized_scores(X, C, score_scale) - cc
-                # np.argmax returns the FIRST max index; cids are in
-                # ascending order, so ties already break low
-                best = cids_np[np.argmax(s, axis=1)]
-                out = {c0: pdf[c0] for c0 in cols}
-                out[centroid_id_col] = best.astype("int32")
-                yield pd.DataFrame(out)
-
-        return corpus.filter(
-            F.col(vec_col).isNotNull()
-        ).mapInPandas(assign, schema=out_schema)
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("__cid"),
-            F.col(vec_col).alias("__cvec"),
-        )
-    )
-    scored = corpus.crossJoin(c).select(
-        *corpus.columns,
-        F.col("__cid"),
+    crows = sorted(
         (
-            F.lit(2)
-            * dot_quantized(F.col(vec_col), F.col("__cvec"), score_scale)
-            - dot_quantized(F.col("__cvec"), F.col("__cvec"), score_scale)
-        ).alias("__dq"),
+            (int(r[centroid_id_col]), [float(v) for v in r[vec_col]])
+            for r in centroids.collect()
+        ),
+        key=lambda t: t[0],
     )
-    best = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__dq"),
-                    (-F.col("__cid")).alias("n"),
-                    F.col("__cid").alias("cid"),
-                )
-            ).alias("__b")
-        )
-        .select(F.col(id_col), F.col("__b.cid").alias(centroid_id_col))
+    cids_np = np.asarray([c0 for c0, _ in crows], dtype=np.int64)
+    C = np.asarray([v for _, v in crows], dtype=np.float64)
+    cc = _np_self_scores(C, score_scale)
+    out_schema = T.StructType(
+        list(corpus.schema) + [centroids.schema[centroid_id_col]]
     )
-    return corpus.join(best, on=id_col)
+    cols = corpus.columns
+
+    def assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            s = 2 * _np_quantized_scores(X, C, score_scale) - cc
+            # np.argmax returns the FIRST max index; cids are in
+            # ascending order, so ties already break low
+            out = {c0: pdf[c0] for c0 in cols}
+            out[centroid_id_col] = cids_np[np.argmax(s, axis=1)]
+            yield pd.DataFrame(out)
+
+    return corpus.filter(F.col(vec_col).isNotNull()).mapInPandas(
+        assign, schema=out_schema
+    )
 
 
 def kmeans_update(
@@ -409,112 +354,6 @@ def ivf_assign(
     )
 
 
-def hierarchical_assign(
-    corpus: DataFrame,
-    coarse_centroids: DataFrame,
-    fine_centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    coarse_id_col: str = "gid",
-    centroid_id_col: str = "cid",
-    nprobe: int = 1,
-) -> DataFrame:
-    """Two-level IVF assignment for k-proportional-to-N codebooks.
-
-    The SemDeDup/IVF scale contract grows the codebook with the
-    corpus (k ~ N / occupancy), which makes FLAT argmax assignment
-    N x k dot products — QUADRATIC in N (measured: the 100x
-    scale-probe's store build is dominated by exactly this).  Routing
-    through a coarse codebook of k1 groups costs N x (k1 + k/k1)
-    instead, minimized at k1 = sqrt(k) — the standard two-level IVF
-    ingest shape.  ``fine_centroids`` must carry its group id
-    (``coarse_id_col``), normally produced by
-    ``ivf_assign(fine_centroids, coarse_centroids)`` — a k x k1 job,
-    negligible beside the corpus pass.
-
-    Step 1: each vector picks its coarse group (max dot, ties to the
-    smaller group id — ivf_assign).  Step 2: it scores ONLY that
-    group's fine centroids (broadcast equi-join on the group id,
-    per-vector struct-max).  The assignment is approximate relative
-    to flat argmax — a vector whose true nearest fine centroid sits
-    in a different coarse cell gets its own cell's best instead (the
-    standard IVF routing tradeoff; raise nprobe-style recall by
-    calling with a multi-probe coarse assignment if needed).  Both
-    levels are broadcast joins + map-side-collapsing argmax aggs:
-    one shuffle on ``id_col``, same as ivf_assign.
-
-    Corpus vectors only ever route to coarse groups that OWN at
-    least one fine centroid (the coarse codebook is semi-filtered
-    first): without that, a vector whose nearest coarse cell ended
-    up empty of fine centroids would silently vanish from the
-    assignment (measured: 2.3% of the 100x probe corpus)."""
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    owned = coarse_centroids.join(
-        F.broadcast(
-            fine_centroids.select(coarse_id_col).distinct()
-        ),
-        on=coarse_id_col,
-        how="leftsemi",
-    )
-    if nprobe == 1:
-        coarse = ivf_assign(
-            corpus, owned, id_col=id_col, vec_col=vec_col,
-            centroid_id_col=coarse_id_col,
-        )
-    else:
-        # multi-probe routing (ivf_topk's recall lever applied to
-        # ingest): each vector carries its top-nprobe coarse groups,
-        # so the fine argmax sees nprobe cells' centroids — raises
-        # agreement with the flat argmax at nprobe x the fine-stage
-        # cost (hier_assign_agreement measures the tradeoff)
-        c = F.broadcast(
-            owned.select(
-                F.col(coarse_id_col).alias("__gid"),
-                F.col(vec_col).alias("__cvec"),
-            )
-        )
-        w = Window.partitionBy(id_col).orderBy(
-            F.desc("__gscore"), F.asc("__gid")
-        )
-        coarse = (
-            corpus.crossJoin(c)
-            .withColumn(
-                "__gscore", dot(F.col(vec_col), F.col("__cvec"))
-            )
-            .withColumn("__grk", F.row_number().over(w))
-            .filter(F.col("__grk") <= int(nprobe))
-            .select(*corpus.columns, F.col("__gid").alias(coarse_id_col))
-        )
-    f = F.broadcast(
-        fine_centroids.select(
-            F.col(coarse_id_col),
-            F.col(centroid_id_col).alias("__fcid"),
-            F.col(vec_col).alias("__fvec"),
-        )
-    )
-    best = (
-        coarse.join(f, on=coarse_id_col)
-        .select(
-            F.col(id_col),
-            F.col("__fcid"),
-            dot(F.col(vec_col), F.col("__fvec")).alias("__score"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__score"),
-                    (-F.col("__fcid")).alias("n"),
-                    F.col("__fcid").alias("cid"),
-                )
-            ).alias("__b")
-        )
-        .select(F.col(id_col), F.col("__b.cid").alias(centroid_id_col))
-    )
-    return corpus.join(best, on=id_col)
-
-
 def routing_tree_assign(
     corpus: DataFrame,
     levels: list[DataFrame],
@@ -524,7 +363,7 @@ def routing_tree_assign(
     spread: bool = True,
 ) -> DataFrame:
     """L-level IVF routing tree (VERDICT r8 item 3 — the general form
-    of ``hierarchical_assign``): ``levels`` are centroid tables
+    of two-level IVF ingest assignment): ``levels`` are centroid tables
     coarsest to finest; ``levels[0]`` carries (level_id_cols[0],
     vec_col), every deeper ``levels[i]`` additionally carries its
     parent's id column ``level_id_cols[i-1]`` (normally produced by
@@ -553,8 +392,8 @@ def routing_tree_assign(
     Transitive leaf ownership is enforced top-down: a level-i
     centroid routes traffic only if some leaf centroid descends from
     it (semi-filter chain), else vectors routed into a childless cell
-    would vanish from the assignment (the hierarchical_assign
-    lesson, measured at 2.3% of the 100x corpus)."""
+    would vanish from the assignment (measured at 2.3% of the 100x
+    corpus under the earlier two-level router)."""
     if len(levels) != len(level_id_cols) or not levels:
         raise ValueError("levels and level_id_cols must match, non-empty")
     # the whole route (every level's argmax fold) fuses into the
@@ -679,7 +518,6 @@ def kmeans_parallel_seeds(
     oversample: int | None = None,
     rounds: int | None = None,
     score_scale: float = 1e12,
-    batch_score: bool = False,
 ) -> tuple[list[list[float]], int]:
     """k-means|| seeding (Bahmani et al., VLDB 2012): O(log k) corpus
     passes instead of farthest-first's k-1 sequential scans — the
@@ -699,20 +537,11 @@ def kmeans_parallel_seeds(
     integer-quantized distances, id-sorted candidate order, argmax
     ties to the lowest index.
 
-    ``batch_score=True`` computes each round's nearest-candidate
-    scores in ONE Arrow-batched numpy pass (_np_quantized_scores —
-    bit-identical integers, so admissions, phi, and therefore the
-    SEEDS are byte-identical to the HOF form, parity-pinned) instead
-    of the corpus x candidates crossJoin of interpreted HOF
-    arithmetic that made codebook-scale k a minutes-per-fit affair
-    (SCALE.md wave 16/17: the binding cost capping nlist at ~100).
-
-    Precondition (same contract as kmeans_assign): ``id_col`` values
-    are unique and ``vec_col`` is non-NULL.  The HOF path groupBys on
-    ``id_col`` while the batch path scores row-at-a-time, so duplicate
-    ids (or NULL vectors, which only the batch path filters) would
-    give the two forms DIFFERENT phi and admission probabilities —
-    the byte-identical-seeds parity holds only under this contract.
+    Each round's nearest-candidate scores are ONE Arrow-batched numpy
+    pass (_np_quantized_scores) — an interpreted corpus x candidates
+    crossJoin made codebook-scale k a minutes-per-fit affair (SCALE.md
+    wave 16/17: the binding cost capping nlist at ~100).  Rows with a
+    NULL vector take no part (kmeans_assign's drop contract).
 
     Returns (seed_vectors, n_rounds); n_rounds <= ceil(log2 k) + 1.
     """
@@ -725,7 +554,7 @@ def kmeans_parallel_seeds(
     n_rounds = (
         int(rounds) if rounds else max(1, math.ceil(math.log2(max(k, 2))))
     )
-    src = corpus.select(id_col, vec_col)
+    src = corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     first = (
         src.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h", id_col)
@@ -738,82 +567,32 @@ def kmeans_parallel_seeds(
     rounds_run = 0
     for rnd in range(n_rounds):
         rounds_run = rnd + 1
-        if batch_score:
-            C = np.asarray(cand, dtype=np.float64)
-            cc_self = _np_self_scores(C, score_scale)
+        C = np.asarray(cand, dtype=np.float64)
+        cc_self = _np_self_scores(C, score_scale)
 
-            def d2_batches(batches, C=C, cc_self=cc_self):
-                import pandas as pd
+        def d2_batches(batches, C=C, cc_self=cc_self):
+            import pandas as pd
 
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.stack(
-                        [
-                            np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]
-                        ]
-                    )
-                    smax = (
-                        2 * _np_quantized_scores(X, C, score_scale)
-                        - cc_self
-                    ).max(axis=1)
-                    d2q = _np_self_scores(X, score_scale) - smax
-                    yield pd.DataFrame(
-                        {
-                            id_col: pdf[id_col],
-                            vec_col: pdf[vec_col],
-                            "__d2q": d2q,
-                        }
-                    )
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                X = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                )
+                smax = (
+                    2 * _np_quantized_scores(X, C, score_scale) - cc_self
+                ).max(axis=1)
+                d2q = _np_self_scores(X, score_scale) - smax
+                yield pd.DataFrame(
+                    {id_col: pdf[id_col], vec_col: pdf[vec_col], "__d2q": d2q}
+                )
 
-            d2 = src.filter(F.col(vec_col).isNotNull()).mapInPandas(
-                d2_batches,
-                schema=T.StructType(
-                    list(src.schema)
-                    + [T.StructField("__d2q", T.LongType())]
-                ),
-            )
-        else:
-            cdf = spark.createDataFrame(
-                list(enumerate(cand)), f"cid int, {vec_col} array<double>"
-            )
-            c = F.broadcast(
-                cdf.select(
-                    F.col("cid").alias("__cid"),
-                    F.col(vec_col).alias("__cvec"),
-                )
-            )
-            scored = src.crossJoin(c).select(
-                id_col,
-                F.col(vec_col),
-                (
-                    F.lit(2)
-                    * dot_quantized(
-                        F.col(vec_col), F.col("__cvec"), score_scale
-                    )
-                    - dot_quantized(
-                        F.col("__cvec"), F.col("__cvec"), score_scale
-                    )
-                ).alias("__s"),
-            )
-            d2 = (
-                scored.groupBy(id_col)
-                .agg(
-                    F.max("__s").alias("__smax"),
-                    F.first(vec_col).alias(vec_col),
-                )
-                .select(
-                    id_col,
-                    vec_col,
-                    (
-                        dot_quantized(
-                            F.col(vec_col), F.col(vec_col), score_scale
-                        )
-                        - F.col("__smax")
-                    ).alias("__d2q"),
-                )
-            )
+        d2 = src.mapInPandas(
+            d2_batches,
+            schema=T.StructType(
+                list(src.schema) + [T.StructField("__d2q", T.LongType())]
+            ),
+        )
         phi = d2.agg(F.sum("__d2q")).first()[0]
         phi = int(phi or 0)
         if phi <= 0:  # every point coincides with a candidate
@@ -847,7 +626,7 @@ def kmeans_parallel_seeds(
     )
     wrows = (
         kmeans_assign(src, cdf, id_col=id_col, vec_col=vec_col,
-                      score_scale=score_scale, batch_score=batch_score)
+                      score_scale=score_scale)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()
@@ -891,7 +670,6 @@ def kmeans_fit(
     quant_scale: float = 1e6,
     score_scale: float = 1e12,
     tol_q: int = 0,
-    batch_score: bool = False,
     seed_corpus: DataFrame | None = None,
 ):
     """Full Lloyd iteration to (near-)convergence. Returns
@@ -901,8 +679,9 @@ def kmeans_fit(
     argmin|x-c|^2 = argmax(2*x.c - |c|^2), both terms integer-
     quantized — assignment is bit-deterministic in every iteration.
 
-    Scale shape: each iteration is ONE distributed pass (broadcast
-    centroids, map-side scoring, hash agg on a (k x dims) keyspace);
+    Scale shape: each iteration is ONE distributed pass (driver-held
+    centroids, Arrow-batched numpy scoring, hash agg on a (k x dims)
+    keyspace);
     the per-iteration collect is k x dims rows — bounded by the model
     size, never the data. Centroids re-enter each iteration as a fresh
     literal DataFrame, so the corpus lineage never grows (the
@@ -917,17 +696,10 @@ def kmeans_fit(
 
     Train on a SAMPLED slice at codebook-scale k (pass
     ``corpus.filter(pmod(id, s) == 0)`` — the codebook is a model,
-    not a sketch, and sampling is standard practice): the seeding's
-    candidate scoring is a corpus x ~(2k·log k) crossJoin of
-    interpreted higher-order-function arithmetic, measured in MINUTES
-    at k=64 over a 20k-row corpus (SCALE.md sixteenth wave) — the
-    sampled fit plus a full-corpus kmeans_assign is the shape that
-    holds at 100 TB.
-
-    ``batch_score=True`` routes the seeding rounds AND every Lloyd
-    assignment through the Arrow-batched numpy scorer — bit-identical
-    centroids for NULL-free corpora (parity-pinned), at a fraction of
-    the interpreted-HOF cost that capped codebook k (wave 17).
+    not a sketch, and sampling is standard practice): the seeding
+    scores the corpus against ~(2k·log k) candidates — the sampled
+    fit plus a full-corpus kmeans_assign is the shape that holds at
+    100 TB.  Rows with a NULL vector are dropped (kmeans_assign).
 
     ``seed_corpus`` (optional) seeds k-means|| from a SUB-slice of the
     training corpus while Lloyd iterates on the full one: the seeding
@@ -944,7 +716,7 @@ def kmeans_fit(
     seed_vecs, _ = kmeans_parallel_seeds(
         corpus if seed_corpus is None else seed_corpus,
         k, id_col=id_col, vec_col=vec_col,
-        score_scale=score_scale, batch_score=batch_score,
+        score_scale=score_scale,
     )
     cents = list(enumerate(seed_vecs))
     dims = len(cents[0][1]) if cents else 0
@@ -958,7 +730,6 @@ def kmeans_fit(
         assigned = kmeans_assign(
             corpus.select(id_col, vec_col), cdf,
             id_col=id_col, vec_col=vec_col, score_scale=score_scale,
-            batch_score=batch_score,
         )
         upd = {
             (r["cid"], r["dim"]): (r["sum_q"], r["n"])
@@ -1992,10 +1763,11 @@ def opq_rotation(
 # codebook cannot exploit decorrelation (4,872 raw / 5,603 PCA —
 # tests/test_round11_opq.py).  This family is the production RECALL
 # path (round-11 VERDICT item 3): OPQ-rotate, train per-subspace
-# codebooks with the same kmeans_fit the IVF tier uses, encode, and
-# ADC-probe — floats throughout, verified by numpy parity tests and a
-# recall gate on the anisotropic fixture rather than a DuckDB hash
-# (k-means training is not SQL-expressible).
+# codebooks with the same kmeans_fit the IVF tier uses, encode
+# (pq_encode_trained_batch), and ADC-probe (plans/lake.py
+# trained_pq_topk) — floats throughout, verified by numpy parity tests
+# and a recall gate on the anisotropic fixture rather than a DuckDB
+# hash (k-means training is not SQL-expressible).
 
 
 def pq_train_codebooks(
@@ -2053,18 +1825,9 @@ def pq_train_codebooks(
             if seed is not None
             else None
         )
-        # batch_score: the input is rotated output of pca_project
-        # over a NULL-filtered corpus with unique ids — the batch
-        # path's exact contract, and bit-identical to the HOF form
-        # (parity-pinned).  At k_codes=256 over a wave-18 rows-per-
-        # cell training slice the HOF seeding alone was minutes per
-        # subspace; the Arrow-batched scorer makes 8-bit codebooks a
-        # budget question, not a cliff (the same fix that removed the
-        # coarse-quantizer nlist cap in wave 17).
         cdf, _, _ = kmeans_fit(
             sliced, int(k_codes), max_iter=max_iter,
-            id_col=id_col, vec_col=vec_col, batch_score=True,
-            seed_corpus=seed_sliced,
+            id_col=id_col, vec_col=vec_col, seed_corpus=seed_sliced,
         )
         rows = {
             int(r["cid"]): [float(v) for v in r[vec_col]]
@@ -2072,93 +1835,6 @@ def pq_train_codebooks(
         }
         books.append([rows[c] for c in range(int(k_codes))])
     return books
-
-
-def _pq_books_literal(codebooks: list) -> Column:
-    """The trained codebooks as ONE nested array plan literal
-    (m_sub x k x sub doubles — model-sized, same feasibility bound as
-    pca_project's rotation literal)."""
-    return F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(float(v)) for v in code])
-                    for code in book
-                ]
-            )
-            for book in codebooks
-        ]
-    )
-
-
-def _pq_trained_dist(qv: Column, b: Column, m, c, sub: int) -> Column:
-    """Squared L2 between query subvector m and trained codebook entry
-    (m, c) of the BOUND codebooks value ``b`` — one zip_with over the
-    sub dims, the entry looked up once (not once per dim).  ``b``
-    must be a lambda-BOUND books value (see pq_encode_trained), never
-    the raw _pq_books_literal expression: referenced directly inside
-    a higher-order lambda, the 1024-literal nested CreateArray
-    re-materializes on every evaluation — measured >470 s for a 20k-
-    row encode pass vs ~2 s bound (the SCALE.md pitfall-1 class,
-    resurfacing in the trained tier)."""
-    entry = F.element_at(
-        F.element_at(b, (m + 1).cast("int")), (c + 1).cast("int")
-    )
-    seg = F.slice(qv, m * F.lit(sub) + F.lit(1), F.lit(sub))
-    return F.aggregate(
-        F.zip_with(seg, entry, lambda a, t: (a - t) * (a - t)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def pq_encode_trained(vec: Column, codebooks: list) -> Column:
-    """PQ codes against TRAINED codebooks: per subspace, the argmin-L2
-    code (ties to the smaller code via a struct-least fold — each
-    candidate distance evaluated exactly once).  The codebooks
-    literal is BOUND once per row via the transform(array(..))[0]
-    trick (the same pitfall-1 discipline as pq_encode's qv binding).
-    Pure per-row projection: a 100 TB encode is a scan+project, same
-    shape as the formula-codebook pq_encode.
-
-    Tie contract vs pq_encode_trained_batch: both break DISTANCE ties
-    to the smaller code, but the two forms sum the subvector distance
-    in different orders (an interpreted left fold here, a vectorized
-    numpy reduction there), so two candidate distances are only
-    guaranteed to compare equal up to float associativity — a
-    near-tie (|d1-d2| within a few ULPs) MAY encode differently
-    between the forms.  Exact agreement holds when distances are
-    exactly representable or separated beyond rounding (the parity
-    test's fixtures); consumers needing bit-stable codes across forms
-    must encode through ONE form, which the store build does (batch
-    form only)."""
-    m_sub = len(codebooks)
-    k = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    v = vec.cast("array<double>")
-
-    def with_books(b: Column) -> Column:
-        def code_for(m: Column) -> Column:
-            best = F.aggregate(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                F.struct(
-                    F.lit(float("inf")).alias("d"), F.lit(k).alias("c")
-                ),
-                lambda acc, c: F.least(
-                    acc,
-                    F.struct(
-                        _pq_trained_dist(v, b, m, c, sub).alias("d"),
-                        c.cast("int").alias("c"),
-                    ),
-                ),
-            )
-            return best["c"]
-
-        return F.transform(F.sequence(F.lit(0), F.lit(m_sub - 1)), code_for)
-
-    return F.transform(
-        F.array(_pq_books_literal(codebooks)), with_books
-    )[0]
 
 
 def pq_encode_trained_batch(
@@ -2169,24 +1845,18 @@ def pq_encode_trained_batch(
     vec_col: str = "embedding",
     passthrough: tuple = (),
 ) -> DataFrame:
-    """Arrow-batched rotate+encode for the TRAINED store build: ONE
-    mapInPandas corpus pass computes X @ W^T and the per-subspace
-    argmin codes with numpy matmuls — measured ~100x the column-
-    expression form (pq_encode_trained ran 20k rows in 307 s even
-    with the books bound once per row: nested higher-order lambdas
-    evaluate interpreted, and the struct-least fold allocates per
-    candidate; vectorized numpy is the production shape for this
-    much per-row float math, exactly the §2.10 Arrow-batch boundary).
-    Ties break to the smallest code (np.argmin), matching the column
-    form UP TO FLOAT ASSOCIATIVITY — the two forms sum subvector
-    distances in different orders, so a near-tie within rounding may
-    encode differently (see pq_encode_trained's tie contract); cross-
-    parity is test-pinned on the anisotropic fixture, and the store
-    build uses this form exclusively so at-rest codes are self-
-    consistent.  ``passthrough`` columns (e.g. an IVF cid) ride the
-    Arrow batch untouched — carrying them HERE is free, joining them
-    back by id afterwards would shuffle the corpus.  Returns (id_col
-    long, codes array<int>, *passthrough)."""
+    """Arrow-batched rotate+encode against TRAINED codebooks — the one
+    trained-PQ encoder: ONE mapInPandas corpus pass computes X @ W^T
+    and the per-subspace argmin codes with numpy matmuls (measured
+    ~100x an interpreted column-expression encode, which ran 20k rows
+    in 307 s: nested higher-order lambdas evaluate interpreted, and a
+    struct-least fold allocates per candidate — the §2.10 Arrow-batch
+    boundary).  Ties break to the smallest code (np.argmin); the store
+    build and its upserts both encode through this one form, so
+    at-rest codes are self-consistent.  ``passthrough`` columns (e.g.
+    an IVF cid) ride the Arrow batch untouched — carrying them HERE is
+    free, joining them back by id afterwards would shuffle the corpus.
+    Returns (id_col long, codes array<int>, *passthrough)."""
     import numpy as np
     import pandas as pd
 
@@ -2226,85 +1896,6 @@ def pq_encode_trained_batch(
         df.select(id_col, vec_col, *passthrough)
         .filter(F.col(vec_col).isNotNull())
         .mapInPandas(enc, schema=out_schema)
-    )
-
-
-def pq_query_lut_trained(vec: Column, codebooks: list) -> Column:
-    """Per-query ADC lookup table against trained codebooks:
-    lut[m·k + c] = squared L2 between query subvector m and entry
-    (m, c).  Computed once per query row (books bound once, same
-    discipline as pq_encode_trained); scoring a stored code row then
-    costs m_sub element_at lookups (asymmetric distance)."""
-    m_sub = len(codebooks)
-    k = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    v = vec.cast("array<double>")
-
-    def with_books(b: Column) -> Column:
-        def entry(i: Column) -> Column:
-            m = (i / F.lit(k)).cast("int")
-            c = F.pmod(i, F.lit(k))
-            return _pq_trained_dist(v, b, m, c, sub)
-
-        return F.transform(F.sequence(F.lit(0), F.lit(m_sub * k - 1)), entry)
-
-    return F.transform(
-        F.array(_pq_books_literal(codebooks)), with_books
-    )[0]
-
-
-def pq_adc_topk_trained(
-    codes: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    topk: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "qid",
-    codes_col: str = "codes",
-    partial_buckets: int = 32,
-) -> DataFrame:
-    """ADC top-k over an ALREADY-ENCODED corpus (the trained pq_codes
-    store): broadcast the queries with their precomputed trained-LUTs,
-    score each stored code row with m_sub table lookups, two-stage
-    top-k.  Returns (qid, vec_id, adc_dist) ascending-best; ties break
-    to the smaller id inside two_stage_topk.  The queries must already
-    live in the SAME rotated space as the stored codes (the store's
-    probe wrapper applies its persisted rotation)."""
-    m_sub = len(codebooks)
-    k = len(codebooks[0])
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("__qid"),
-            pq_query_lut_trained(F.col(vec_col), codebooks).alias("__lut"),
-        )
-    )
-    lut, cds = F.col("__lut"), F.col(codes_col)
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc
-        + F.element_at(
-            lut,
-            (m * F.lit(k) + F.element_at(cds, (m + 1).cast("int")) + 1)
-            .cast("int"),
-        ),
-    )
-    scored = (
-        codes.crossJoin(q)
-        .filter(F.col(id_col) != F.col("__qid"))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(id_col),
-            (-dist).alias("__neg"),
-        )
-    )
-    out = two_stage_topk(
-        scored, topk, id_col=id_col, query_id_col=query_id_col,
-        score_col="__neg", partial_buckets=partial_buckets,
-    )
-    return out.select(
-        query_id_col, id_col, (-F.col("__neg")).alias("adc_dist")
     )
 
 

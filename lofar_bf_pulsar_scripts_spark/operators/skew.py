@@ -113,6 +113,14 @@ def key_skew_report(
     )
 
 
+# Estimated-size cap for spread_small_scan: above it an input is never
+# round-robined, whatever its task count.  A one-task scan of a
+# sandbox table is KBs-MBs; a multi-GB input that scans in a few
+# tasks on a cluster is better served by its own scan splits than by
+# shuffling its whole payload once.
+SPREAD_MAX_BYTES = 256 << 20
+
+
 def spread_small_scan(df: DataFrame, multiple: int = 1) -> DataFrame:
     """Scale-adaptive scan spread for CPU-heavy per-row pipelines
     (guide §2.5: "one huge unsplittable file ... repartition
@@ -125,10 +133,13 @@ def spread_small_scan(df: DataFrame, multiple: int = 1) -> DataFrame:
     parallelism.  Measured at sf0.1 / local[32]: the sign-LSH corpus
     signature stage alone reads 1.53 s single-task vs 0.50 s spread.
 
-    Scale shape: an input that already scans in >= defaultParallelism
-    tasks is returned UNCHANGED, so at 100 TB (where the scan has
-    thousands of tasks) this never inserts a payload shuffle — the
-    spread only engages exactly when the scan starves the machine.
+    Scale shape: an input whose optimized plan estimates more than
+    ``SPREAD_MAX_BYTES``, or that already scans in >=
+    defaultParallelism tasks, is returned UNCHANGED, so on a cluster
+    (bytes) and at 100 TB (thousands of scan tasks) this never inserts
+    a payload shuffle — the spread only engages when a SMALL scan
+    starves the machine.  Both checks read the frame's own query
+    execution on the JVM side.
     Callers apply it AFTER projecting to the columns the downstream
     compute needs, so the one-time round-robin exchange moves the
     narrow projection, not the full row (guide §2.3).  The keyless
@@ -139,8 +150,14 @@ def spread_small_scan(df: DataFrame, multiple: int = 1) -> DataFrame:
 
     ``multiple`` > 1 oversubscribes (multiple tasks per core) for
     pipelines whose per-row cost is very uneven."""
+    qe = df._jdf.queryExecution()
+    # a Scala BigInt, which py4j may or may not convert to a Python int
+    size = qe.optimizedPlan().stats().sizeInBytes()
+    if int(str(size)) > SPREAD_MAX_BYTES:
+        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * max(1, int(multiple))
-    if df.rdd.getNumPartitions() >= target:
+    # the frame's own physical plan: Dataset.rdd() would plan it again
+    if qe.toRdd().getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -531,18 +531,17 @@ def trained_pq_topk(
 
     The rotation and per-query LUT are computed DRIVER-SIDE in numpy
     and shipped as broadcast DATA (r14 optimization — the same
-    discipline trained_ivf_pq_rerank_topk adopted in wave 18): the
-    old pca_project + pq_query_lut_trained plan expressions re-embed
-    the dims^2 rotation and m*k*sub codebook literals into the plan,
-    so every probe paid codegen/planning for thousands of literals
-    (measured 5.1 s flat probe at sf0.1; 2.0 s after).  The collect is
-    query-sized (the probe contract already collects query rows in
-    the IVF tier); the rotation replicates pca_project's SEQUENTIAL
-    per-dim fold (a BLAS ``@`` differs in the last 1-3 ulps — measured
-    flipping nothing but the printed distance tail, but bit-identity
-    is free here), and the per-entry (a-t)^2 accumulation replicates
-    _pq_trained_dist's fold order — output verified BIT-identical at
-    sf0.01/sf0.1 against the expression form (24/24 rows each)."""
+    discipline trained_ivf_pq_rerank_topk adopted in wave 18): a
+    plan-expression rotation + LUT re-embeds the dims^2 rotation and
+    m*k*sub codebook literals into the plan, so every probe paid
+    codegen/planning for thousands of literals (measured 5.1 s flat
+    probe at sf0.1; 2.0 s after).  The collect is query-sized (the
+    probe contract already collects query rows in the IVF tier); the
+    rotation replicates pca_project's SEQUENTIAL per-dim fold (a BLAS
+    ``@`` differs in the last 1-3 ulps — measured flipping nothing but
+    the printed distance tail, but bit-identity is free here), and
+    the per-entry (a-t)^2 accumulation is a sequential fold over the
+    sub dims in ascending order."""
     import os
 
     import numpy as np
@@ -722,18 +721,13 @@ def build_trained_ivf_pq_store(
         if seed_mult > 1
         else None
     )
-    # coarse quantizer on the SAMPLED slice (k-means|| seeding is a
-    # corpus x ~2k·log k crossJoin — the sampled-fit + full-assign
-    # split is the shape that holds at 100 TB, SCALE.md wave 16),
-    # then ONE full-corpus assignment pass
-    # batch_score: the corpus is NULL-filtered above, so the Arrow-
-    # batched numpy scorer is bit-identical to the HOF form and the
-    # quantizer fit stops being the build's wall-clock (wave 17: the
-    # seeding cost capped nlist at ~100)
+    # coarse quantizer on the SAMPLED slice (k-means|| seeding scores
+    # the corpus against ~2k·log k candidates — the sampled-fit +
+    # full-assign split is the shape that holds at 100 TB, SCALE.md
+    # wave 16), then ONE full-corpus assignment pass
     cent_df, _, _ = kmeans_fit(
         train.select(id_col, vec_col), n_centroids,
         max_iter=kmeans_iter, id_col=id_col, vec_col=vec_col,
-        batch_score=True,
         seed_corpus=(
             seed.select(id_col, vec_col) if seed is not None else None
         ),
@@ -747,7 +741,7 @@ def build_trained_ivf_pq_store(
         spark.createDataFrame(
             centroids, f"cid int, {vec_col} array<double>"
         ),
-        id_col=id_col, vec_col=vec_col, batch_score=True,
+        id_col=id_col, vec_col=vec_col,
     )
     if residual:
         # RESIDUAL coding (the classic IVF-PQ composition): the
@@ -873,7 +867,7 @@ def upsert_trained_ivf_pq(
     scratch, forcing a full retrain+rewrite per nightly batch):
 
       - assign the batch to the PERSISTED coarse centroids
-        (batch-scored kmeans_assign — bit-identical to the build's
+        (kmeans_assign — bit-identical to the build's
         partitioning, so an upserted vector lands exactly where a
         rebuild under the SAME centroids would put it);
       - encode with the PERSISTED rotation + codebooks, honoring the
@@ -923,7 +917,7 @@ def upsert_trained_ivf_pq(
     # vectors-tier rewrite, and the encode input — and the rewrites
     # below REPLACE files a lazy plan would re-read
     assigned = kmeans_assign(
-        src, cdf, id_col=id_col, vec_col=vec_col, batch_score=True,
+        src, cdf, id_col=id_col, vec_col=vec_col,
     ).localCheckpoint()
     n_batch = assigned.count()
     if n_batch == 0:
@@ -1061,9 +1055,10 @@ def trained_ivf_pq_rerank_topk(
     The query side is collected ONCE (probe-request-sized by
     contract — the same bound the broadcast already assumes) and the
     centroid ranking computed driver-side against the model-sized
-    centroid table with a numpy replica of dot_quantized's per-dim
-    floor(x*y*scale + 0.5) integer form, so probe selection is
-    bit-identical to the store's kmeans_assign partitioning and the
+    centroid table with kmeans_assign's own numpy kernels
+    (_np_quantized_scores: the per-dim floor(x*y*scale + 0.5) integer
+    form the kmeans_update_step oracle SQL evaluates), so probe
+    selection is bit-identical to the store's partitioning and the
     whole probe costs one collect job up front instead of a
     crossJoin + window + collect chain per call."""
     import numpy as np
@@ -1093,9 +1088,9 @@ def trained_ivf_pq_rerank_topk(
         [np.asarray(r[vec_col], dtype=np.float64) for r in qrows]
     )
     # argmin L2 == argmax(2 q.c - |c|^2), every per-dim product
-    # floored at score_scale exactly as dot_quantized evaluates it —
-    # int64 sums (like kmeans_assign's _np_quantized_scores), not
-    # float64: a float64 sum of floored products drifts from the
+    # floored at score_scale — int64 sums through the same kernels
+    # kmeans_assign partitioned the store with, not float64: a
+    # float64 sum of floored products drifts from the
     # store's partitioning once |sum| exceeds 2^53, flipping near-tie
     # probe selection
     qc = _np_quantized_scores(qx, cmat, score_scale)
@@ -1109,13 +1104,13 @@ def trained_ivf_pq_rerank_topk(
     # rotate(q - centroid[cell]) — the IVF-PQ residual contract; in
     # raw mode every probed cell of a query shares one LUT.  The LUT
     # ships as DATA (|queries| x nprobe rows of m_sub*k doubles), not
-    # as the pq_query_lut_trained plan expression: the column form
-    # re-embeds the m*k*sub codebook literal in the plan, and at 8-bit
-    # codebooks (k=256 -> 16k literals) codegen/planning dominated the
-    # probe (~16 s flat regardless of nprobe — wave 18; the SCALE.md
-    # pitfall-1 literal class).  Bit-identical values: the per-entry
-    # accumulation below replicates _pq_trained_dist's sequential
-    # (a-t)^2 fold order in float64.
+    # as a plan expression: a column-form LUT re-embeds the m*k*sub
+    # codebook literal in the plan, and at 8-bit codebooks (k=256 ->
+    # 16k literals) codegen/planning dominated the probe (~16 s flat
+    # regardless of nprobe — wave 18; the SCALE.md pitfall-1 literal
+    # class).  The per-entry accumulation below is a sequential
+    # (a-t)^2 fold over the sub dims in float64, the same order as
+    # trained_pq_topk's LUT.
     bnp = np.asarray(books, dtype=np.float64)  # (m_sub, k, sub)
     n_books, k_codes, sub = bnp.shape
 
@@ -1500,6 +1495,9 @@ def lsh_ann_topk_stored(
             f"hamming_probes={h} out of range [0, n_bits={n_bits}]"
         )
     qrows = queries.select(query_id_col, vec_col).collect()
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    empty = f"{query_id_col} {qid_type}, {id_col} {id_type}, cos double"
     pair_rows = []
     for r in qrows:
         if r[vec_col] is None or len(r[vec_col]) != dims:
@@ -1515,10 +1513,10 @@ def lsh_ann_topk_stored(
             for b in {bkt} | {bkt ^ (1 << j) for j in range(h)}:
                 pair_rows.append((r[query_id_col], qv, t, b))
     if not pair_rows:
-        empty = f"{query_id_col} long, {id_col} long, cos double"
         return spark.createDataFrame([], empty)
     q_ex = spark.createDataFrame(
-        pair_rows, ["__qid", "__qvec", "tbl", "bkt"]
+        pair_rows,
+        f"__qid {qid_type}, __qvec array<double>, tbl bigint, bkt bigint",
     )
     pairs = {(t, b) for _, _, t, b in pair_rows}
     pred = _reduce(
@@ -1547,9 +1545,7 @@ def lsh_ann_topk_stored(
         if _store_exists(spark, p)
     ]
     if not leaf:
-        empty = f"{query_id_col} long, {id_col} long, cos double"
         return spark.createDataFrame([], empty)
-    id_type = corpus.schema[id_col].dataType.simpleString()
     store = (
         spark.read.schema(f"{id_col} {id_type}, tbl int, bkt bigint")
         .option("basePath", base)

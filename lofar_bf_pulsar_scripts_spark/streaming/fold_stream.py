@@ -134,52 +134,23 @@ def run_bounded(
     there returns an empty table, caught by the oracle gate when this
     default first landed).
 
-    State-store provider: ``SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb``
-    switches the replay to the RocksDB provider (with changelog
-    checkpointing) — the production choice for state far beyond
-    executor memory.  Default is the session default (HDFS-backed):
-    an r15 alternating A/B at sf0.1 (~174k state rows) measured
-    RocksDB WORSE for these bounded replays (funnel-joins chain
-    min-of-4 4.05 -> 5.29 s, as-of joins 3.44 -> 4.05 s) — the
-    per-query native store open/commit overhead dominates until state
-    outgrows memory, so the knob exists but stays off locally.
-
-    Conf scope: the three conf flips below are SESSION-GLOBAL and
+    Conf scope: the two conf flips below are SESSION-GLOBAL and
     restored in ``finally`` — run_bounded is not safe to call
     concurrently with another bounded replay (or any other streaming
     query) in the same session; every set happens INSIDE the try that
-    owns the restore, so no setting can leak on an exception."""
-    import os
-
+    owns the restore, so no setting can leak on an exception.  A conf
+    that was unset before the call is unset again after it."""
     spark = query_df.sparkSession
-    _NDB = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _PARTS = "spark.sql.shuffle.partitions"
-    _PROV = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev_ndb = spark.conf.get(_NDB, "true")
-    prev_parts = None
-    prev_prov = None
-    use_rocksdb = (
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").lower()
-        == "rocksdb"
-    )
+    flips = {}
+    if not watermark_flush:
+        flips["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if shuffle_partitions is not None:
+        flips["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # conf.get(key, None) is None iff the key is not set in the session
+    prev = {key: spark.conf.get(key, None) for key in flips}
     try:
-        if not watermark_flush:
-            spark.conf.set(_NDB, "false")
-        if shuffle_partitions is not None:
-            prev_parts = spark.conf.get(_PARTS)
-            spark.conf.set(_PARTS, str(shuffle_partitions))
-        if use_rocksdb:
-            prev_prov = spark.conf.get(_PROV, None)
-            spark.conf.set(_PROV, _ROCKSDB)
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
+        for key, value in flips.items():
+            spark.conf.set(key, value)
         writer = (
             query_df.writeStream.outputMode(mode)
             .format("memory")
@@ -196,14 +167,11 @@ def run_bounded(
         finally:
             q.stop()
     finally:
-        spark.conf.set(_NDB, prev_ndb)
-        if prev_parts is not None:
-            spark.conf.set(_PARTS, prev_parts)
-        if use_rocksdb:
-            if prev_prov is None:
-                spark.conf.unset(_PROV)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
             else:
-                spark.conf.set(_PROV, prev_prov)
+                spark.conf.set(key, value)
     return spark.table(name)
 
 

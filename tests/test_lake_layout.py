@@ -200,6 +200,38 @@ def test_lsh_ann_topk_stored_parity_and_pruning(spark, tmp_path):
     assert a == b and a
 
 
+def test_lsh_ann_topk_stored_keeps_int_id_types(spark, tmp_path):
+    """Every return path of the stored LSH probe carries the inputs'
+    id types: a hit, a query that probes no existing bucket
+    directory, and a malformed query that probes nothing at all."""
+    from lofar_bf_pulsar_scripts_spark.plans.lake import (
+        ensure_lsh_signatures,
+        lsh_ann_topk_stored,
+    )
+
+    v = [0.3, -0.7, 0.2, 0.9, -0.4, 0.1, 0.6, -0.5]
+    corpus = spark.createDataFrame(
+        [(0, v), (1, [2 * x for x in v])],
+        "vec_id int, embedding array<double>",
+    )
+    path = str(tmp_path / "lsh_int_ids")
+    ensure_lsh_signatures(corpus, path, n_tables=2, n_bits=4, dims=8)
+
+    def probe(rows):
+        q = spark.createDataFrame(rows, "qid int, embedding array<double>")
+        out = lsh_ann_topk_stored(
+            corpus, q, path, k=3, n_tables=2, n_bits=4, dims=8
+        )
+        types = [(f.name, f.dataType.simpleString()) for f in out.schema]
+        assert types[:2] == [("qid", "int"), ("vec_id", "int")]
+        return [(r["qid"], r["vec_id"]) for r in out.collect()]
+
+    assert probe([(0, v)]) == [(0, 1)]
+    # -v flips every hyperplane sign: its buckets hold no corpus vector
+    assert probe([(5, [-x for x in v])]) == []
+    assert probe([(6, v[:4])]) == []
+
+
 def test_salted_join_equals_plain_join(spark):
     from lofar_bf_pulsar_scripts_spark.operators.skew import salted_join
     from lofar_bf_pulsar_scripts_spark.tables import load_table

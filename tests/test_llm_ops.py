@@ -694,7 +694,6 @@ def test_global_rank_matches_single_sort(spark):
 
 def test_kmeans_step(spark, vectors):
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        dot_quantized,
         kmeans_assign,
         kmeans_update,
     )
@@ -1703,95 +1702,6 @@ def test_incremental_near_dup_hand_case(spark, tmp_path):
     mtime = os.path.getmtime(os.path.join(store, "_SUCCESS"))
     ensure_minhash_bands(corpus, store)
     assert os.path.getmtime(os.path.join(store, "_SUCCESS")) == mtime
-
-
-def test_hierarchical_assign_matches_flat_on_separated_clusters(spark):
-    """When coarse cells are well separated, two-level routing gives
-    the same assignment as the flat argmax; a deliberately
-    cross-cell vector exposes the documented routing approximation."""
-    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hierarchical_assign,
-        ivf_assign,
-    )
-
-    # two coarse groups on orthogonal axes; two fine centroids each
-    mk = lambda axis, a, b: [  # noqa: E731
-        (a if i == axis else (b if i == axis + 1 else 0.0))
-        for i in range(8)
-    ]
-    coarse = spark.createDataFrame(
-        [(0, mk(0, 1.0, 0.0)), (1, mk(4, 1.0, 0.0))],
-        "gid long, embedding array<double>",
-    )
-    fine = spark.createDataFrame(
-        [
-            (10, mk(0, 1.0, 0.1)),
-            (11, mk(0, 1.0, -0.1)),
-            (20, mk(4, 1.0, 0.1)),
-            (21, mk(4, 1.0, -0.1)),
-        ],
-        "cid long, embedding array<double>",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (0, mk(0, 2.0, 0.3)),   # group 0, nearer fine 10
-            (1, mk(0, 2.0, -0.3)),  # group 0, nearer fine 11
-            (2, mk(4, 5.0, 0.2)),   # group 1, nearer fine 20
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    fine_g = ivf_assign(fine, coarse, id_col="cid", centroid_id_col="gid")
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in hierarchical_assign(corpus, coarse, fine_g).collect()
-    }
-    assert got == {0: 10, 1: 11, 2: 20}
-    flat = {
-        r["vec_id"]: r["cid"] for r in ivf_assign(corpus, fine).collect()
-    }
-    assert got == flat
-
-
-def test_hierarchical_assign_nprobe_raises_agreement(spark):
-    """Multi-probe routing recovers flat-argmax assignments that
-    single-probe misses; at nprobe = |coarse| it equals flat."""
-    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hierarchical_assign,
-        ivf_assign,
-    )
-    from lofar_bf_pulsar_scripts_spark.tables import load_table
-
-    e = (
-        load_table(spark, "embeddings", "/root/testdata/sf0.001")
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") < 300)
-    )
-    coarse = e.filter(F.pmod(F.col("vec_id"), F.lit(100)) == 0).select(
-        F.col("vec_id").alias("gid"), "embedding"
-    )
-    fine = e.filter(F.pmod(F.col("vec_id"), F.lit(30)) == 0).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
-    fine_g = ivf_assign(fine, coarse, id_col="cid", centroid_id_col="gid")
-    flat = {
-        r["vec_id"]: r["cid"] for r in ivf_assign(e, fine).collect()
-    }
-
-    def agree(nprobe):
-        got = {
-            r["vec_id"]: r["cid"]
-            for r in hierarchical_assign(
-                e, coarse, fine_g, nprobe=nprobe
-            ).collect()
-        }
-        assert set(got) == set(flat)  # no vector ever dropped
-        return sum(got[k] == flat[k] for k in flat)
-
-    n1, n_all = agree(1), agree(3)  # 3 = |owned coarse| upper bound
-    assert n_all == len(flat)  # probing every group IS the flat argmax
-    assert n1 <= n_all
-    with pytest.raises(ValueError):
-        hierarchical_assign(e, coarse, fine_g, nprobe=0)
 
 
 def test_quality_linear_score_hand_case(spark):

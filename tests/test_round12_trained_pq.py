@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from lofar_bf_pulsar_scripts_spark.operators.similarity import (
     pq_adc_topk,
-    pq_encode_trained,
     pq_train_codebooks,
 )
 from lofar_bf_pulsar_scripts_spark.plans.lake import (
@@ -52,7 +51,7 @@ def store(spark, tmp_path_factory):
 
 
 def _np_encode(xr, books):
-    """numpy replica of pq_encode_trained over rotated vectors."""
+    """numpy replica of pq_encode_trained_batch over rotated vectors."""
     sub = DIMS // M_SUB
     codes = np.zeros((len(xr), M_SUB), dtype=np.int32)
     for m in range(M_SUB):
@@ -75,38 +74,6 @@ def test_encode_parity_with_numpy(spark, store):
         i for i in range(len(x)) if got[i] != [int(c) for c in want[i]]
     ]
     assert not mism, (mism[:5], got[mism[0]] if mism else None)
-
-
-def test_column_encode_equals_batch_encode(spark, store):
-    """The column-expression encode (pq_encode_trained — the small-
-    input/JVM form) and the Arrow-batched numpy encode the store
-    build uses must agree code-for-code."""
-    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        pq_encode_trained_batch,
-    )
-    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        pca_project,
-    )
-
-    x, df, path = store
-    w, books = read_trained_pq_model(spark, path)
-    small = df.filter(F.col("vec_id") < 200)
-    expr = {
-        int(r["vec_id"]): list(r["c"])
-        for r in pca_project(small, w, out_col="__rot")
-        .select(
-            "vec_id",
-            pq_encode_trained(
-                F.col("__rot").cast("array<double>"), books
-            ).alias("c"),
-        )
-        .collect()
-    }
-    batch = {
-        int(r["vec_id"]): list(r["codes"])
-        for r in pq_encode_trained_batch(small, w, books).collect()
-    }
-    assert expr == batch
 
 
 def test_adc_parity_with_numpy(spark, store):

@@ -1,18 +1,15 @@
 """Round-13: Arrow-batched numpy scoring for k-means|| seeding and
 Lloyd assignment — the cost that capped the coarse-quantizer size
-(SCALE.md waves 16/17).  The batch path must be BIT-IDENTICAL to the
-interpreted-HOF form: _np_quantized_scores replicates dot_quantized's
-per-dim floor((x*y)*scale + 0.5) in the same float64 op order with
-int64 sums, and argmax ties break to the smaller cid exactly like
-the struct-max."""
+(SCALE.md waves 16/17).  kmeans_assign scores argmax(2*x.c - |c|^2)
+with _np_quantized_scores (per-dim floor((x*y)*scale + 0.5), int64
+sums); argmax ties break to the smaller cid, and NULL vectors are
+dropped (ivf_assign's contract)."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from lofar_bf_pulsar_scripts_spark.operators.similarity import (
     kmeans_assign,
-    kmeans_fit,
-    kmeans_parallel_seeds,
 )
 
 DIMS = 16
@@ -27,50 +24,43 @@ def _corpus(spark, n=600, seed=3):
     )
 
 
-def test_seed_parity(spark):
-    e = _corpus(spark).cache()
-    e.count()
-    s_hof, r_hof = kmeans_parallel_seeds(e, 12, batch_score=False)
-    s_np, r_np = kmeans_parallel_seeds(e, 12, batch_score=True)
-    assert r_hof == r_np
-    assert s_hof == s_np  # byte-identical seed vectors, same order
-    e.unpersist()
-
-
 def test_assign_parity_including_ties(spark):
     e = _corpus(spark, n=200)
-    # duplicate centroids force exact score ties: both paths must
-    # break to the smaller cid
+    # duplicate centroids force exact score ties: they must break to
+    # the smaller cid, as the plain-numpy argmax below does
     cent_rows = [(0, [0.5] * DIMS), (1, [0.5] * DIMS), (2, [-0.5] * DIMS)]
     cent = spark.createDataFrame(
         cent_rows, "cid int, embedding array<double>"
     )
-    a_hof = {
+    rows = e.collect()
+    C = np.asarray([v for _, v in cent_rows], dtype=np.float64)
+    cc = np.floor(C * C * 1e12 + 0.5).astype(np.int64).sum(-1)
+    want = {}
+    for r in rows:
+        x = np.asarray(r["embedding"], dtype=np.float64)
+        xc = np.floor(x[None, :] * C * 1e12 + 0.5).astype(np.int64).sum(-1)
+        want[int(r["vec_id"])] = int(np.argmax(2 * xc - cc))  # first max
+    got = {
         int(r["vec_id"]): int(r["cid"])
-        for r in kmeans_assign(e, cent, batch_score=False).collect()
+        for r in kmeans_assign(e, cent).collect()
     }
-    a_np = {
-        int(r["vec_id"]): int(r["cid"])
-        for r in kmeans_assign(e, cent, batch_score=True).collect()
-    }
-    assert a_hof == a_np
-    assert 1 not in set(a_np.values())  # ties went to cid 0, never 1
+    assert got == want
+    assert 1 not in set(got.values())  # ties went to cid 0, never 1
 
 
-def test_fit_parity(spark):
-    e = _corpus(spark, n=400, seed=9).cache()
-    e.count()
-    c_hof, _, it_hof = kmeans_fit(e, 6, max_iter=3, batch_score=False)
-    c_np, _, it_np = kmeans_fit(e, 6, max_iter=3, batch_score=True)
-    assert it_hof == it_np
-    rows_hof = sorted(
-        (int(r["cid"]), tuple(r["embedding"])) for r in c_hof.collect()
+def test_assign_drops_null_vectors(spark):
+    e = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
+        "vec_id bigint, embedding array<double>",
     )
-    rows_np = sorted(
-        (int(r["cid"]), tuple(r["embedding"])) for r in c_np.collect()
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid int, embedding array<double>"
     )
-    assert rows_hof == rows_np
-    e.unpersist()
+    got = {
+        int(r["vec_id"]): int(r["cid"])
+        for r in kmeans_assign(e, cent).collect()
+    }
+    assert got == {0: 0, 2: 1}  # the NULL row has no nearest centroid
 
 
 def test_batch_assign_carries_all_columns_without_shuffle(spark):
@@ -79,7 +69,7 @@ def test_batch_assign_carries_all_columns_without_shuffle(spark):
         [(0, [0.5] * DIMS), (1, [-0.5] * DIMS)],
         "cid int, embedding array<double>",
     )
-    out = kmeans_assign(e, cent, batch_score=True)
+    out = kmeans_assign(e, cent)
     assert set(out.columns) == {"vec_id", "embedding", "extra", "cid"}
     import contextlib
     import io

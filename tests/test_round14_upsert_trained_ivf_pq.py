@@ -87,7 +87,6 @@ def test_upsert_equals_full_encode_under_same_model(spark, upserted):
     )
     assigned = kmeans_assign(
         full, cdf, id_col="vec_id", vec_col="embedding",
-        batch_score=True,
     ).localCheckpoint()
     want_vecs = {
         (r["vec_id"], r["cid"])
@@ -204,9 +203,8 @@ def test_latest_wins_when_ids_move_cells(spark, tmp_path_factory):
     )
     want_cid = {
         r["vec_id"]: r["cid"]
-        for r in kmeans_assign(
-            batch, cdf, batch_score=True
-        ).select("vec_id", "cid").collect()
+        for r in kmeans_assign(batch, cdf)
+        .select("vec_id", "cid").collect()
     }
     got_cid = {
         r["vec_id"]: r["cid"]

@@ -25,6 +25,21 @@ def test_spread_engages_only_below_parallelism(spark):
     assert spread_small_scan(one, multiple=2).rdd.getNumPartitions() == 2 * par
 
 
+def test_spread_skips_inputs_above_byte_cap(spark):
+    """A one-partition frame estimated at 64 GiB (2^33 longs) is left
+    alone — no payload round-robin — while a small one is spread."""
+
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "Exchange"
+        )
+
+    big = spark.range(1 << 33, numPartitions=1)
+    assert exchanges(spread_small_scan(big)) == exchanges(big) == 0
+    small = spark.range(1000, numPartitions=1)
+    assert exchanges(spread_small_scan(small)) == 1
+
+
 def test_spread_preserves_rows(spark):
     df = spark.range(0, 5000).select(
         F.col("id"), (F.col("id") * 7 % 13).alias("v")

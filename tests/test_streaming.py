@@ -221,11 +221,23 @@ def test_streaming_sessions_equal_batch(spark):
     os.makedirs(tmp, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", os.path.join(tmp, "events.parquet"))
     ev_stream = stream_events(spark, tmp).select("user_id", "ts")
+
+    def streaming_confs():
+        return {
+            r["key"]: r["value"]
+            for r in spark.sql("SET").collect()
+            if r["key"].startswith("spark.sql.streaming.")
+            or r["key"] == "spark.sql.shuffle.partitions"
+        }
+
+    confs_before = streaming_confs()
     stream_sessions = run_bounded(
         streaming_sessions(ev_stream, ["user_id"], ts_col="ts", gap="1 hour"),
         "sessions_replay",
         shuffle_partitions=4,
     )
+    # run_bounded's conf flips are session-global: none may outlive it
+    assert streaming_confs() == confs_before
     ev_batch = load_table(spark, "events", SF_DIR).select(
         "user_id", F.expr("timestamp_micros(ts div 1000)").alias("ts")
     )
