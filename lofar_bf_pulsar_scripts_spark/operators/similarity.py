@@ -287,70 +287,19 @@ def ivf_assign(
     spread: bool = True,
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
-    centroid (max dot, ties to the smaller centroid id).
-
-    Fully MAP-SIDE (r9 rewrite): the codebook is collapsed into one
-    broadcast candidate array and the argmax is an in-row
-    ``transform`` (each dot computed exactly once) + ``aggregate``
-    fold — the corpus pays zero exchanges, where the previous
-    crossJoin + groupBy(id) argmax exploded N x k rows and shuffled
-    the corpus once per call. Fold order is irrelevant: argmax under
-    the total order (score desc, id asc) over a fixed candidate set
-    is order-independent, so results are bit-identical to the
-    aggregation form the DuckDB oracles mirror FOR NON-NULL VECTORS.
-    Rows whose embedding is NULL (or whose dots are all NULL) are
-    DROPPED, by contract: NULL > -inf is NULL, so the fold's acc
-    stays (-inf, null) and the final isNotNull filter removes the
-    row — whereas the old struct-max form arbitrarily assigned such
-    rows to the smallest centroid id (null scores sort first).  A
-    null vector has no nearest centroid; silently parking it on
-    centroid 0 skewed that cell's occupancy, so the drop is the
-    intended semantics (round-10 ADVICE: divergence documented).
-    The single-row candidate array carries the same bytes the
-    codebook broadcast always did — feasibility at scale is
-    unchanged (a codebook too big for one array was already too big
-    to broadcast; that regime belongs to ``routing_tree_assign``)."""
-    cands = centroids.agg(
-        F.collect_list(
-            F.struct(
-                F.col(centroid_id_col).alias("i"),
-                F.col(vec_col).alias("v"),
-            )
-        ).alias("__cands")
-    )
-    v = F.col(vec_col)
-    scored = F.transform(
-        F.col("__cands"),
-        lambda c: F.struct(dot(v, c["v"]).alias("s"), c["i"].alias("i")),
-    )
-    best = F.aggregate(
-        scored,
-        F.struct(
-            F.lit(float("-inf")).alias("s"),
-            F.lit(None)
-            .cast(centroids.schema[centroid_id_col].dataType)
-            .alias("i"),
-        ),
-        lambda acc, c: F.when(
-            (c["s"] > acc["s"])
-            | ((c["s"] == acc["s"]) & (c["i"] < acc["i"])),
-            c,
-        ).otherwise(acc),
-    )
-    from .skew import spread_small_scan
-
-    # the k-candidate argmax fold is interpreted per-row HOF work
-    # fused into the input's scan — spread a single-task sandbox scan
-    # across the machine (r15; no-op for >= parallelism inputs).
-    # Codebook-sized routing calls (ivf_assign(fine, coarse)) pass
-    # spread=False: an exchange of a model-sized frame buys nothing.
-    if spread:
-        corpus = spread_small_scan(corpus)
-    return (
-        corpus.crossJoin(F.broadcast(cands))
-        .withColumn(centroid_id_col, best["i"])
-        .drop("__cands")
-        .filter(F.col(centroid_id_col).isNotNull())
+    centroid (max dot, ties to the smaller centroid id) — the
+    one-level case of ``routing_tree_assign``: one broadcast
+    candidate array and an in-row argmax fold, zero exchanges on the
+    corpus.  Results are bit-identical to the aggregation form the
+    DuckDB oracles mirror FOR NON-NULL VECTORS.  Rows whose embedding
+    is NULL are DROPPED, by contract: a null vector has no nearest
+    centroid, and parking it on centroid 0 would skew that cell's
+    occupancy (round-10 ADVICE: divergence documented).  An existing
+    ``centroid_id_col`` in the corpus is overwritten; the output
+    column takes the type of the centroids' id column."""
+    return routing_tree_assign(
+        corpus, [centroids], [centroid_id_col],
+        id_col=id_col, vec_col=vec_col, spread=spread,
     )
 
 
@@ -393,7 +342,10 @@ def routing_tree_assign(
     centroid routes traffic only if some leaf centroid descends from
     it (semi-filter chain), else vectors routed into a childless cell
     would vanish from the assignment (measured at 2.3% of the 100x
-    corpus under the earlier two-level router)."""
+    corpus under the earlier two-level router).
+
+    Rows whose vector is NULL are dropped; the finest level's id
+    column is added, or overwritten when the corpus already has it."""
     if len(levels) != len(level_id_cols) or not levels:
         raise ValueError("levels and level_id_cols must match, non-empty")
     # the whole route (every level's argmax fold) fuses into the
@@ -449,7 +401,12 @@ def routing_tree_assign(
             ).otherwise(acc),
         )
         out = j.withColumn("__grp", best["i"]).drop("__cands")
-    return out.withColumnRenamed("__grp", level_id_cols[-1])
+        if i == 0:
+            # a NULL vector keeps the fold's (-inf, null) seed: it has
+            # no cell and is dropped here; a vector routed at level 0
+            # always gets a cell from its parent's non-empty children
+            out = out.filter(F.col("__grp").isNotNull())
+    return out.withColumn(level_id_cols[-1], F.col("__grp")).drop("__grp")
 
 
 def ivf_topk(
@@ -767,183 +724,129 @@ _LSH_KNUTH = 2654435761  # Knuth multiplicative-hash constant
 _LSH_MOD = 4294967296  # 2^32
 
 
-def _plane_component(p: Column, i: Column, dims: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-0.5, 0.5).
+def _np_sign_lsh(X, n_tables: int, n_bits: int, dims: int, scale: float):
+    """Sign-LSH bucket ids of the rows of ``X`` (float64, n x dims) as
+    int64[n, n_tables]: ``bucket_t = Σ_b bit(t*n_bits+b) << b``, where
+    the bit is the sign of the integer-quantized dot of the row with
+    hyperplane ``p = t*n_bits + b``.
 
     ``h_p[i] = ((1 + p*dims + i) * 2654435761 mod 2^32) / 2^32 - 0.5``
-    for 0-based plane ``p`` and 1-based dim index ``i``. Every value is
-    exactly representable in a double (an integer < 2^32 divided by a
-    power of two, minus 0.5), so any engine evaluating the same closed
-    form produces bit-identical planes — no literal plane tables to
-    ship or store.
-    """
-    n = (F.lit(1) + p * F.lit(dims) + i) * F.lit(_LSH_KNUTH)
-    return (
-        (n % F.lit(_LSH_MOD)).cast("double") / F.lit(float(_LSH_MOD))
-        - F.lit(0.5)
-    )
+    for 1-based dim ``i``: an integer below 2^32 over a power of two,
+    minus 0.5, is exact in a double, so any engine evaluating the
+    closed form gets the same planes — no plane table to ship or
+    store.  Each per-dim term is ``floor(x*h*scale + 0.5)``, one fixed
+    IEEE double expression, and the terms are summed in int64, which
+    is associative: the sign cannot flip with summation order.  This
+    is the DuckDB oracle's arithmetic (registry ``_LSH_SIG_BASE``) bit
+    for bit.  Collision probability rises with cosine similarity
+    (Charikar sign-LSH); more tables trade compute for recall."""
+    import numpy as np
 
-
-def hyperplane_buckets(
-    vec: Column,
-    n_tables: int = 4,
-    n_bits: int = 6,
-    dims: int = 64,
-    scale: float = 1e6,
-) -> Column:
-    """One LSH bucket id per table: ``bucket_t = Σ_b bit(t*n_bits+b)<<b``
-    where bit = sign of the integer-quantized dot vec·h_plane (each
-    per-dim product floored before the sum — associative, so the sign
-    can never flip with evaluation order or engine).
-
-    Returns ``array<bigint>`` of length ``n_tables``. A pure per-row
-    projection (no shuffle, no state): 2^n_bits buckets per table,
-    collision probability rising with cosine similarity (Charikar
-    sign-LSH). Multiple tables trade compute for recall.
-
-    Deliberately built from NESTED lambdas (table → bit → dim) rather
-    than unrolled per-plane expressions: an unrolled tree of
-    n_tables×n_bits aggregates made Catalyst analysis + codegen the
-    dominant cost (measured 5.1s → 1.6s at sf0.1 for the identical
-    arithmetic). Every plane term is evaluated exactly once — no
-    shared subexpression for CollapseProject to duplicate (SCALE.md
-    pitfall 1).
-    """
-
-    def dotq(p: Column) -> Column:
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(dims)),
-            F.lit(0).cast("bigint"),
-            lambda a, i: a
-            + F.floor(
-                F.element_at(vec, i).cast("double")
-                * _plane_component(p, i.cast("bigint"), dims)
-                * F.lit(float(scale))
-                + F.lit(0.5)
-            ).cast("bigint"),
-        )
-
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_bits - 1)),
-            F.lit(0).cast("bigint"),
-            lambda acc, b: acc
-            + F.when(
-                dotq(t.cast("bigint") * F.lit(n_bits) + b.cast("bigint")) > 0,
-                # 2^b is exact in double for b < 53; cast back is exact
-                F.pow(F.lit(2.0), b).cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint")),
-        ),
-    )
-
-
-def hyperplane_buckets_py(
-    vec,
-    n_tables: int = 4,
-    n_bits: int = 6,
-    dims: int = 64,
-    scale: float = 1e6,
-) -> list[int]:
-    """Driver-side replica of ``hyperplane_buckets`` for a single
-    vector — every step is the same correctly-rounded IEEE-754 double
-    operation as the column form (exact dyadic plane components,
-    floored integer products, integer sums), so the buckets are
-    BIT-IDENTICAL; pinned by the store-parity test. Used to hash a
-    bounded query set without paying the column expression's
-    per-plan Catalyst cost (~3 s) for a handful of rows."""
-    import math
-
-    out = []
-    for t in range(n_tables):
-        bucket = 0
-        for b in range(n_bits):
-            p = t * n_bits + b
-            acc = 0
-            for i in range(1, dims + 1):
-                h = (
-                    ((1 + p * dims + i) * _LSH_KNUTH) % _LSH_MOD
-                ) / _LSH_MOD - 0.5
-                acc += math.floor(float(vec[i - 1]) * h * scale + 0.5)
-            if acc > 0:
-                bucket += 1 << b
-        out.append(bucket)
+    p = np.arange(n_tables * n_bits, dtype=np.int64)[:, None]
+    i = np.arange(1, dims + 1, dtype=np.int64)[None, :]
+    planes = ((1 + p * dims + i) * _LSH_KNUTH % _LSH_MOD) / _LSH_MOD - 0.5
+    weights = np.left_shift(1, np.arange(n_bits, dtype=np.int64))
+    out = np.empty((len(X), n_tables), dtype=np.int64)
+    step = max(1, (1 << 21) // planes.size)  # ~16 MB of terms a chunk
+    for r0 in range(0, len(X), step):
+        terms = np.floor(X[r0:r0 + step, None, :] * planes * scale + 0.5)
+        bits = terms.astype(np.int64).sum(axis=-1) > 0
+        out[r0:r0 + step] = (
+            bits.reshape(-1, n_tables, n_bits) * weights
+        ).sum(axis=-1)
     return out
 
 
-def hyperplane_buckets_long(
+def _with_lsh_buckets(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 4,
-    n_bits: int = 6,
-    dims: int = 64,
-    scale: float = 1e6,
+    vec_col: str,
+    n_tables: int,
+    n_bits: int,
+    dims: int,
+    scale: float,
 ) -> DataFrame:
-    """Long-form signature build: (id, tbl, bucket) rows, bit-identical
-    to ``hyperplane_buckets`` (same planes, same integer-quantized
-    terms — integer sums are associative, so the evaluation order
-    difference cannot flip a sign).
+    """``df`` plus ``__sig array<bigint>``, the ``_np_sign_lsh`` buckets
+    of each row, in ONE Arrow-batched mapInPandas pass that carries
+    every input column through (no shuffle, no id-join back).  Rows
+    whose vector is not exactly ``dims`` long are DROPPED — NULL
+    included, size(NULL) = -1: such a vector has no buckets, and
+    parking it in a fixed one would hand every query of that bucket a
+    junk candidate (the degenerate-bucket trap ``lsh_buckets`` guards
+    against for empty MinHash signatures)."""
+    import numpy as np
 
-    Throughput path for corpus-sized inputs: posexplode + a broadcast
-    plane-table join + two hash aggregations — everything stays in
-    whole-stage codegen, where the column form pays interpreted
-    higher-order-function evaluation per row (measured ~3x slower at
-    sf0.1 plus a multi-second one-time codegen of its giant
-    expression). Shuffle volume is (n_tables*n_bits + n_tables) tiny
-    rows per vector — the signature rows themselves, not embeddings.
-    """
-    spark = df.sparkSession
-    planes = spark.createDataFrame(
-        [
-            (
-                p,
-                i - 1,  # posexplode dim index is 0-based
-                float(
-                    ((1 + p * dims + i) * _LSH_KNUTH % _LSH_MOD) / _LSH_MOD
-                    - 0.5
-                ),
+    out_schema = T.StructType(
+        list(df.schema)
+        + [T.StructField("__sig", T.ArrayType(T.LongType()))]
+    )
+
+    def sign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            for p in range(n_tables * n_bits)
-            for i in range(1, dims + 1)
-        ],
-        "p int, dim int, h double",
+            pdf["__sig"] = list(
+                _np_sign_lsh(X, n_tables, n_bits, dims, scale)
+            )
+            yield pdf
+
+    return df.filter(F.size(F.col(vec_col)) == dims).mapInPandas(
+        sign, schema=out_schema
     )
-    # same malformed-vector exclusion as lsh_ann_topk: a short array
-    # would otherwise produce PARTIAL sums here (fewer join matches)
-    # while the column form yields NULL-poisoned bucket 0 — breaking
-    # the bit-parity contract between the two forms.
-    ex = df.filter(F.size(F.col(vec_col)) == dims).select(
-        F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "__v")
-    )
-    terms = (
-        ex.join(F.broadcast(planes), on="dim")
-        .groupBy(
-            id_col,
-            (F.col("p") / n_bits).cast("int").alias("__tbl"),
-            F.pmod(F.col("p"), n_bits).alias("__bit"),
+
+
+def _lsh_query_probes(
+    queries: DataFrame,
+    query_id_col: str,
+    vec_col: str,
+    n_tables: int,
+    n_bits: int,
+    dims: int,
+    scale: float,
+    hamming_probes: int,
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """The sign-LSH probes of a bounded query set, hashed DRIVER-SIDE
+    with ``_np_sign_lsh`` (a Spark pass would pay a job and a Python
+    worker for a handful of rows).  Returns the probe rows
+    ``(__qid, __qvec array<double>, tbl int, bkt bigint)``, one per
+    query, table and probed bucket, and the sorted distinct
+    ``(tbl, bkt)`` pairs they probe.
+
+    ``hamming_probes=h`` is multi-probe LSH: each query also probes
+    the h buckets at Hamming distance 1 obtained by flipping bit
+    j < h of its own bucket, per table.  Queries whose vector is not
+    exactly ``dims`` long (NULL included) probe nothing, as on the
+    corpus side — such a query would otherwise come back with k
+    NULL-cosine rows instead of being absent."""
+    import numpy as np
+
+    h = int(hamming_probes)
+    if not 0 <= h <= n_bits:
+        raise ValueError(
+            f"hamming_probes={h} out of range [0, n_bits={n_bits}]"
         )
-        .agg(
-            F.sum(
-                F.floor(
-                    F.col("__v").cast("double") * F.col("h")
-                    * F.lit(float(scale)) + F.lit(0.5)
-                ).cast("bigint")
-            ).alias("__s")
-        )
+    qrows = [
+        (r[0], [float(x) for x in r[1]])
+        for r in queries.select(query_id_col, vec_col).collect()
+        if r[1] is not None and len(r[1]) == dims
+    ]
+    sig = _np_sign_lsh(
+        np.asarray([v for _, v in qrows], dtype=np.float64),
+        n_tables, n_bits, dims, scale,
     )
-    return (
-        terms.select(
-            id_col,
-            "__tbl",
-            F.when(
-                F.col("__s") > 0,
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__bit AS INT))"),
-            ).otherwise(F.lit(0).cast("bigint")).alias("__bv"),
-        )
-        .groupBy(id_col, "__tbl")
-        .agg(F.sum("__bv").alias("__bkt"))
+    rows = [
+        (qid, qv, t, b)
+        for (qid, qv), buckets in zip(qrows, sig.tolist())
+        for t, bkt in enumerate(buckets)
+        for b in [bkt] + [bkt ^ (1 << j) for j in range(h)]
+    ]
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    probes = queries.sparkSession.createDataFrame(
+        rows, f"__qid {qid_type}, __qvec array<double>, tbl int, bkt bigint"
     )
+    return probes, sorted({(t, b) for _, _, t, b in rows})
 
 
 def lsh_ann_topk(
@@ -963,94 +866,46 @@ def lsh_ann_topk(
     """Approximate cosine top-k via random-hyperplane LSH buckets —
     the LSH-bucketed ANN variant complementing ``ivf_topk``.
 
-    ``hamming_probes=h`` enables multi-probe LSH: each query also
-    probes the h buckets at Hamming distance 1 obtained by flipping
-    bit j (j < h <= n_bits) of its own bucket, per table — the
-    standard recall lever when the corpus gives LSH little to work
-    with (a near neighbour that disagrees on ONE hyperplane sign is
-    invisible to exact-bucket probing but caught here).  Cost is a
-    (1+h)x larger query-side broadcast and candidate set — the
-    corpus side (and the at-rest store) is untouched, so the probe
-    stays partition-pruned at 100 TB.  Measured on the isotropic
-    sf0.01 corpus: mean recall@20 0.21 (h=0) -> 0.44 (h=2) -> 0.63
-    (h=6) (SCALE.md round 11).
+    ``hamming_probes=h`` enables multi-probe LSH (see
+    ``_lsh_query_probes``) — the standard recall lever when the
+    corpus gives LSH little to work with (a near neighbour that
+    disagrees on ONE hyperplane sign is invisible to exact-bucket
+    probing but caught here).  Cost is a (1+h)x larger query-side
+    broadcast and candidate set — the corpus side (and the at-rest
+    store) is untouched, so the probe stays partition-pruned at
+    100 TB.  Measured on the isotropic sf0.01 corpus: mean recall@20
+    0.21 (h=0) -> 0.44 (h=2) -> 0.63 (h=6) (SCALE.md round 11).
 
-    Scale shape: bucket ids are a per-row projection (no shuffle);
-    candidates come from a BROADCAST hash join of the corpus's
-    exploded (table, bucket) pairs against the exploded query
-    signatures — the corpus is never shuffled and no all-pairs product
+    Scale shape: the corpus is hashed by one Arrow-batched numpy pass
+    (``_with_lsh_buckets``, no shuffle); the bounded query set is
+    hashed on the driver.  Candidates come from a BROADCAST hash join
+    of the corpus's exploded (table, bucket) pairs against the query
+    probes — the corpus is never shuffled and no all-pairs product
     ever forms (candidate count per query is bounded by Σ_t
     |bucket_t|, the same guarantee as the MinHash-LSH dedup path in
     dedup.py). Multi-table duplicate hits collapse through one hash
     agg on (query, id) — candidate-sized, not corpus-sized — and the
     final reduction is the shared ``two_stage_topk``.
 
-    At rest the corpus persists its signature table via
-    ``hyperplane_buckets_long`` partitioned by (tbl, bucket) — then a
-    probe is a partition-pruned scan + id-fetch, exactly like the IVF
-    layout in plans/lake.py; parity between the two signature forms is
-    pytest-pinned.
+    At rest the corpus persists the same buckets through
+    ``plans.lake.write_lsh_signatures``, partitioned by (tbl, bkt) —
+    then a probe is a partition-pruned scan + id-fetch
+    (``plans.lake.lsh_ann_topk_stored``), exactly like the IVF layout.
 
-    A query with an empty bucket in every table returns < k rows
-    (honest ANN recall semantics, mirrored by the oracle).
+    Vectors that are not exactly ``dims`` long are excluded on both
+    sides.  A query with an empty bucket in every table returns < k
+    rows (honest ANN recall semantics, mirrored by the oracle).
     """
-    # NULL, empty, or wrong-dimension vectors hash to bucket 0 in
-    # EVERY table (out-of-range element_at -> NULL poisons the dot
-    # aggregate -> every bit 0) — the same degenerate-bucket O(n²)
-    # trap lsh_buckets guards against for empty MinHash signatures.
-    # Exclude them up front (size(NULL) = -1, so one predicate covers
-    # all three cases).
-    from .skew import spread_small_scan
-
-    corpus = corpus.filter(F.size(F.col(vec_col)) == dims)
-    # Same guard on the query side: a malformed query would hash to
-    # bucket 0 in every table and come back with k NULL-cosine rows
-    # (NULL sorts first inside the rank struct) instead of being absent.
-    queries = queries.filter(F.size(F.col(vec_col)) == dims)
-    sig = hyperplane_buckets(F.col(vec_col), n_tables, n_bits, dims, scale)
-    # spread the interpreted signature fold across the machine — a
-    # single-file sandbox corpus otherwise hashes on ONE scan task
-    # (r15; measured 1.53 -> 0.50 s at sf0.1); corpus-scale inputs
-    # pass through untouched (see spread_small_scan)
-    c_ex = spread_small_scan(corpus.select(id_col, vec_col)).select(
-        F.col(id_col), F.col(vec_col),
-        F.posexplode(sig).alias("__tbl", "__bkt"),
+    probes, _ = _lsh_query_probes(
+        queries, query_id_col, vec_col,
+        n_tables, n_bits, dims, scale, hamming_probes,
     )
-    h = int(hamming_probes)
-    if not 0 <= h <= n_bits:
-        raise ValueError(
-            f"hamming_probes={h} out of range [0, n_bits={n_bits}]"
-        )
-    q_sig = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-    ).select(
-        "__qid",
-        "__qvec",
-        F.posexplode(
-            hyperplane_buckets(
-                F.col("__qvec"), n_tables, n_bits, dims, scale
-            )
-        ).alias("__tbl", "__bkt0"),
-    )
-    q_ex = F.broadcast(
-        q_sig.select(
-            "__qid",
-            "__qvec",
-            "__tbl",
-            F.explode(
-                F.array(
-                    F.col("__bkt0"),
-                    *[
-                        F.col("__bkt0").bitwiseXOR(F.lit(1 << j))
-                        for j in range(h)
-                    ],
-                )
-            ).alias("__bkt"),
-        )
-    )
+    c_ex = _with_lsh_buckets(
+        corpus.select(id_col, vec_col), vec_col,
+        n_tables, n_bits, dims, scale,
+    ).select(id_col, vec_col, F.posexplode("__sig").alias("tbl", "bkt"))
     cand = (
-        c_ex.join(q_ex, on=["__tbl", "__bkt"])
+        c_ex.join(F.broadcast(probes), on=["tbl", "bkt"])
         .filter(F.col(id_col) != F.col("__qid"))
         .groupBy("__qid", id_col)
         .agg(
@@ -1205,6 +1060,25 @@ def pq_query_lut(vec: Column, dims: int, m_sub: int = 4, k: int = 16) -> Column:
     return F.transform(F.array(qv_expr), with_qv)[0]
 
 
+def pq_adc_distance(
+    lut: Column, codes: Column, m_sub: int, k: int, dtype: str
+) -> Column:
+    """Asymmetric PQ distance of one code row: the sequential sum over
+    subspaces m of ``lut[m*k + codes[m]]``, a fold from a ``dtype``
+    zero (``bigint`` for the integer codebooks, ``double`` for trained
+    ones) — m_sub table lookups, no float math on the corpus side."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m_sub - 1)),
+        F.lit(0).cast(dtype),
+        lambda acc, m: acc
+        + F.element_at(
+            lut,
+            (m * F.lit(k) + F.element_at(codes, (m + 1).cast("int")) + 1)
+            .cast("int"),
+        ),
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1239,16 +1113,8 @@ def pq_adc_topk(
             pq_query_lut(F.col(vec_col), dims, m_sub, k_codes).alias("__lut"),
         )
     )
-    codes, lut = F.col("__codes"), F.col("__lut")
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, m: acc
-        + F.element_at(
-            lut,
-            (m * F.lit(k_codes) + F.element_at(codes, (m + 1).cast("int")) + 1)
-            .cast("int"),
-        ),
+    dist = pq_adc_distance(
+        F.col("__lut"), F.col("__codes"), m_sub, k_codes, "bigint"
     )
     scored = (
         enc.crossJoin(q)
@@ -1336,16 +1202,8 @@ def ivf_pq_topk(
     cand = enc.join(F.broadcast(qprobe), on=centroid_id_col).filter(
         F.col(id_col) != F.col(query_id_col)
     )
-    codes, lut = F.col("__codes"), F.col("__lut")
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, m: acc
-        + F.element_at(
-            lut,
-            (m * F.lit(k_codes) + F.element_at(codes, (m + 1).cast("int")) + 1)
-            .cast("int"),
-        ),
+    dist = pq_adc_distance(
+        F.col("__lut"), F.col("__codes"), m_sub, k_codes, "bigint"
     )
     scored = cand.select(
         query_id_col, F.col(id_col), (-dist).alias("__neg")

@@ -115,7 +115,7 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     shingle — quadratic per document (measured: repetition_stats at
     17 s for sf0.1 under the noop executor; ~1.4 s with the bound
     form). ``transform(array(tokens), build)[0]`` is the same
-    nested-lambda binding trick as hyperplane_buckets (pitfall 7)."""
+    bind-once trick as ``similarity.int8_quantize``."""
 
     def build(w: Column) -> Column:
         n = F.size(w)

@@ -99,18 +99,28 @@ def _remove_store_dir(spark: SparkSession, path: str) -> None:
         raise RuntimeError(f"failed to remove store directory {path}")
 
 
-def _swap_store_into_place(spark: SparkSession, tmp: str, path: str) -> None:
-    """Promote a fully-built tmp dir over the store path: delete any
-    stale target, then rename.  Atomic on HDFS/local (one namenode op
-    / one rename(2)); on S3A rename is a copy and the first-build-wins
-    ensure_* protocol additionally needs an external build lock —
-    callers on object stores should build once from one job."""
+def _build_store_once(
+    spark: SparkSession, path: str, build, marker: str = "_SUCCESS"
+) -> str:
+    """The first-build-wins protocol of every ``ensure_*``: unless
+    ``path/marker`` exists, ``build(tmp)`` writes the store into a
+    fresh tmp dir, which is then promoted over the store path: delete
+    any stale target, then rename.  Atomic on HDFS/local (one namenode
+    op / one rename(2)); on S3A rename is a copy and the protocol
+    additionally needs an external build lock — callers on object
+    stores should build once from one job.  Returns ``path``."""
+    if _store_exists(spark, path.rstrip("/") + "/" + marker):
+        return path
+    tmp = path.rstrip("/") + ".tmp"
+    _remove_store_dir(spark, tmp)
+    build(tmp)
     fs, hpath = _store_fs(spark, path)
     tpath = spark._jvm.org.apache.hadoop.fs.Path(tmp)
     if fs.exists(hpath) and not fs.delete(hpath, True):
         raise RuntimeError(f"failed to remove stale store at {path}")
     if not fs.rename(tpath, hpath):
         raise RuntimeError(f"failed to promote {tmp} into {path}")
+    return path
 
 
 def write_embeddings_by_centroid(
@@ -148,13 +158,12 @@ def ensure_embeddings_by_centroid(
     calls are a no-op. This is the at-rest assignment SemDeDup and
     IVF probes share: the kmeans/ivf assign is paid once at ingest,
     every downstream consumer gets a partition-prunable scan."""
-    spark = assigned.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_embeddings_by_centroid(assigned, tmp, centroid_col)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        assigned.sparkSession, path,
+        lambda tmp: write_embeddings_by_centroid(
+            assigned, tmp, centroid_col
+        ),
+    )
 
 
 def read_probed_centroids(
@@ -177,17 +186,17 @@ def write_lsh_signatures(
     n_bits: int = 6,
     dims: int = 64,
 ) -> None:
-    """At-rest LSH signature store: (id, tbl, bkt) rows built with the
-    codegen'd ``hyperplane_buckets_long`` path, Hive-partitioned by
-    (tbl, bkt) — a probe of one (table, bucket) pair is a
-    partition-pruned scan (PartitionFilters, zero IO elsewhere), the
-    sign-LSH mirror of the IVF layout above."""
-    from ..operators.similarity import hyperplane_buckets_long
+    """At-rest LSH signature store: (id, tbl, bkt) rows — the
+    ``_np_sign_lsh`` buckets from one map-only Arrow-batched pass —
+    Hive-partitioned by (tbl, bkt): a probe of one (table, bucket)
+    pair is a partition-pruned scan (PartitionFilters, zero IO
+    elsewhere), the sign-LSH mirror of the IVF layout above.  Vectors
+    that are not exactly ``dims`` long are left out."""
+    from ..operators.similarity import _with_lsh_buckets
 
-    sig = hyperplane_buckets_long(
-        df, id_col=id_col, vec_col=vec_col,
-        n_tables=n_tables, n_bits=n_bits, dims=dims,
-    ).select(id_col, F.col("__tbl").alias("tbl"), F.col("__bkt").alias("bkt"))
+    sig = _with_lsh_buckets(
+        df.select(id_col, vec_col), vec_col, n_tables, n_bits, dims, 1e6
+    ).select(id_col, F.posexplode("__sig").alias("tbl", "bkt"))
     sig.write.mode("overwrite").option(
         "parquet.block.size", STORE_ROWGROUP_BYTES
     ).partitionBy("tbl", "bkt").parquet(path)
@@ -212,13 +221,10 @@ def ensure_lsh_signatures(
     """Build the at-rest LSH signature store once (atomic: write to a
     tmp dir, rename into place); later calls are a no-op. Returns the
     path."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_lsh_signatures(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        corpus.sparkSession, path,
+        lambda tmp: write_lsh_signatures(corpus, tmp, **kwargs),
+    )
 
 
 def write_minhash_bands(
@@ -258,13 +264,10 @@ def ensure_minhash_bands(
 ) -> str:
     """Build the at-rest MinHash band store once (atomic tmp-dir
     rename, first build wins); later calls are a no-op."""
-    spark = docs.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_minhash_bands(docs, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        docs.sparkSession, path,
+        lambda tmp: write_minhash_bands(docs, tmp, **kwargs),
+    )
 
 
 def build_trained_pq_store(
@@ -484,13 +487,11 @@ def upsert_trained_pq(
 def ensure_trained_pq_store(corpus: DataFrame, path: str, **kwargs) -> str:
     """Build the trained PQ store once (atomic tmp-dir rename, first
     build wins); later calls are a no-op."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/model/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        build_trained_pq_store(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        corpus.sparkSession, path,
+        lambda tmp: build_trained_pq_store(corpus, tmp, **kwargs),
+        marker="model/_SUCCESS",
+    )
 
 
 def read_trained_pq_model(
@@ -513,6 +514,23 @@ def read_trained_pq_model(
     k = 1 + max(c for _, c in cb)
     books = [[cb[(m, c)] for c in range(k)] for m in range(m_sub)]
     return [v for _, v in rot], books
+
+
+def _pq_lut(books, rv) -> list:
+    """ADC lookup table of one rotated query ``rv`` against the PQ
+    codebooks ``books`` (float64 ndarray, m_sub x k x sub): the
+    m_sub*k squared distances, flattened m-major.  Each entry is a
+    sequential (a-t)^2 fold over the sub dims in ascending order, so
+    every probe of a trained store builds bit-identical tables."""
+    import numpy as np
+
+    n_books, k_codes, sub = books.shape
+    seg = rv.reshape(n_books, sub)
+    acc = np.zeros((n_books, k_codes))
+    for d in range(sub):
+        diff = seg[:, None, d] - books[:, :, d]
+        acc = acc + diff * diff
+    return [float(x) for x in acc.reshape(-1)]
 
 
 def trained_pq_topk(
@@ -547,7 +565,7 @@ def trained_pq_topk(
     import numpy as np
     from pyspark.sql import types as T
 
-    from ..operators.similarity import two_stage_topk
+    from ..operators.similarity import pq_adc_distance, two_stage_topk
 
     w, books = read_trained_pq_model(spark, path)
     codes = spark.read.parquet(os.path.join(path, "codes"))
@@ -559,15 +577,7 @@ def trained_pq_topk(
     q_schema = queries.select(query_id_col).schema
     wnp = np.asarray(w, dtype=np.float64)
     bnp = np.asarray(books, dtype=np.float64)  # (m_sub, k, sub)
-    n_books, k_codes, sub = bnp.shape
-
-    def _lut(rv: "np.ndarray") -> list:
-        seg = rv.reshape(n_books, sub)
-        acc = np.zeros((n_books, k_codes))
-        for d in range(sub):
-            diff = seg[:, None, d] - bnp[:, :, d]
-            acc = acc + diff * diff
-        return [float(x) for x in acc.reshape(-1)]
+    n_books, k_codes, _ = bnp.shape
 
     def _rotate_seq(v: "np.ndarray") -> "np.ndarray":
         # pca_project's fold: per output dim j, acc += v[d]*w[j][d]
@@ -581,7 +591,9 @@ def trained_pq_topk(
     lut_rows = [
         (
             r[query_id_col],
-            _lut(_rotate_seq(np.asarray(r[vec_col], dtype=np.float64))),
+            _pq_lut(
+                bnp, _rotate_seq(np.asarray(r[vec_col], dtype=np.float64))
+            ),
         )
         for r in qrows
     ]
@@ -596,16 +608,8 @@ def trained_pq_topk(
             ),
         ).select(F.col(query_id_col).alias("__qid"), "__lut")
     )
-    lut, cds = F.col("__lut"), F.col("codes")
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(n_books - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc
-        + F.element_at(
-            lut,
-            (m * F.lit(int(k_codes)) + F.element_at(cds, (m + 1).cast("int")) + 1)
-            .cast("int"),
-        ),
+    dist = pq_adc_distance(
+        F.col("__lut"), F.col("codes"), n_books, int(k_codes), "double"
     )
     scored = (
         codes.crossJoin(q)
@@ -812,13 +816,11 @@ def ensure_trained_ivf_pq_store(
 ) -> str:
     """Build the IVF-pruned trained-PQ store once (atomic tmp-dir
     rename, first build wins); later calls are a no-op."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/model/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        build_trained_ivf_pq_store(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        corpus.sparkSession, path,
+        lambda tmp: build_trained_ivf_pq_store(corpus, tmp, **kwargs),
+        marker="model/_SUCCESS",
+    )
 
 
 def read_trained_ivf_pq_model(
@@ -1067,6 +1069,7 @@ def trained_ivf_pq_rerank_topk(
         _np_quantized_scores,
         _np_self_scores,
         cosine,
+        pq_adc_distance,
         two_stage_topk,
     )
     from pyspark.sql import Window
@@ -1108,27 +1111,17 @@ def trained_ivf_pq_rerank_topk(
     # codebook literal in the plan, and at 8-bit codebooks (k=256 ->
     # 16k literals) codegen/planning dominated the probe (~16 s flat
     # regardless of nprobe — wave 18; the SCALE.md pitfall-1 literal
-    # class).  The per-entry accumulation below is a sequential
-    # (a-t)^2 fold over the sub dims in float64, the same order as
-    # trained_pq_topk's LUT.
+    # class).  The LUT is ``_pq_lut``, the same fold as
+    # trained_pq_topk's.
     bnp = np.asarray(books, dtype=np.float64)  # (m_sub, k, sub)
-    n_books, k_codes, sub = bnp.shape
-
-    def _lut(rv: "np.ndarray") -> list:
-        seg = rv.reshape(n_books, sub)
-        acc = np.zeros((n_books, k_codes))
-        for d in range(sub):
-            diff = seg[:, None, d] - bnp[:, :, d]
-            acc = acc + diff * diff
-        return [float(x) for x in acc.reshape(-1)]
 
     probe_rows = []
     for r, row in zip(qrows, order):
         qv = np.asarray(r[vec_col], dtype=np.float64)
-        shared = None if residual else _lut(qv @ wnp.T)
+        shared = None if residual else _pq_lut(bnp, qv @ wnp.T)
         for j in row[: int(nprobe)]:
             lut_vals = (
-                _lut((qv - cmat[j]) @ wnp.T) if residual else shared
+                _pq_lut(bnp, (qv - cmat[j]) @ wnp.T) if residual else shared
             )
             probe_rows.append(
                 (r[query_id_col], int(cids[j]), lut_vals)
@@ -1160,17 +1153,8 @@ def trained_ivf_pq_rerank_topk(
     codes = spark.read.parquet(path.rstrip("/") + "/codes").filter(
         F.col("cid").isin(probed_cids)
     )
-    m_sub, k = len(books), len(books[0])
-    lut, cds = F.col("__lut"), F.col("codes")
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc
-        + F.element_at(
-            lut,
-            (m * F.lit(k) + F.element_at(cds, (m + 1).cast("int")) + 1)
-            .cast("int"),
-        ),
+    dist = pq_adc_distance(
+        F.col("__lut"), F.col("codes"), len(books), len(books[0]), "double"
     )
     scored = (
         codes.join(probe, on="cid")
@@ -1277,14 +1261,12 @@ def ensure_components_store(comp, path: str, **kwargs) -> str:
             "ensure_components_store with a thunk needs an active "
             "SparkSession to probe the store path"
         )
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        if callable(comp):
-            comp = comp()
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_components_store(comp, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        spark, path,
+        lambda tmp: write_components_store(
+            comp() if callable(comp) else comp, tmp, **kwargs
+        ),
+    )
 
 
 def read_components_store(
@@ -1437,13 +1419,10 @@ def ensure_pq_codes(
 ) -> str:
     """Build the at-rest PQ code store once (atomic tmp+rename, same
     protocol as ensure_lsh_signatures); later calls are a no-op."""
-    spark = assigned.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_pq_codes(assigned, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _build_store_once(
+        assigned.sparkSession, path,
+        lambda tmp: write_pq_codes(assigned, tmp, **kwargs),
+    )
 
 
 def lsh_ann_topk_stored(
@@ -1465,14 +1444,12 @@ def lsh_ann_topk_stored(
     shape of ``lsh_ann_topk`` (same buckets, same results,
     parity-pinned): the corpus's signatures are read from the
     (tbl, bkt)-partitioned parquet written by
-    ``write_lsh_signatures`` instead of being recomputed per query
-    with the column expression.
+    ``write_lsh_signatures`` instead of being recomputed per probe.
 
     Probe plan: the query set is bounded by definition, so its
-    signatures are computed DRIVER-SIDE with
-    ``hyperplane_buckets_py`` (bit-identical closed form; the column
-    expression's ~3 s per-plan Catalyst cost is absurd for a handful
-    of rows). The distinct (tbl, bkt) pairs become a STATIC
+    signatures are computed DRIVER-SIDE (``_lsh_query_probes``, the
+    same kernel and Hamming-1 multi-probe expansion as
+    ``lsh_ann_topk``). The distinct (tbl, bkt) pairs become a STATIC
     disjunctive filter on the store's partition columns, so the store
     scan is partition-pruned at plan time (PartitionFilters,
     plan-asserted; no reliance on runtime DPP). Candidate ids join
@@ -1483,49 +1460,19 @@ def lsh_ann_topk_stored(
     from functools import reduce as _reduce
 
     from ..operators.similarity import (
+        _lsh_query_probes,
         cosine,
-        hyperplane_buckets_py,
         two_stage_topk,
     )
 
     spark = corpus.sparkSession
-    h = int(hamming_probes)
-    if not 0 <= h <= n_bits:
-        raise ValueError(
-            f"hamming_probes={h} out of range [0, n_bits={n_bits}]"
-        )
-    qrows = queries.select(query_id_col, vec_col).collect()
+    probes, pairs = _lsh_query_probes(
+        queries, query_id_col, vec_col,
+        n_tables, n_bits, dims, scale, hamming_probes,
+    )
     qid_type = queries.schema[query_id_col].dataType.simpleString()
     id_type = corpus.schema[id_col].dataType.simpleString()
     empty = f"{query_id_col} {qid_type}, {id_col} {id_type}, cos double"
-    pair_rows = []
-    for r in qrows:
-        if r[vec_col] is None or len(r[vec_col]) != dims:
-            continue  # malformed queries excluded (mirrors lsh_ann_topk)
-        qv = [float(x) for x in r[vec_col]]
-        for t, bkt in enumerate(
-            hyperplane_buckets_py(qv, n_tables, n_bits, dims, scale)
-        ):
-            # multi-probe: the Hamming-1 flips of the query's own
-            # bucket — same expansion as lsh_ann_topk's query side;
-            # the store layout is untouched, the probe just prunes
-            # (1+h) x n_tables partitions instead of n_tables
-            for b in {bkt} | {bkt ^ (1 << j) for j in range(h)}:
-                pair_rows.append((r[query_id_col], qv, t, b))
-    if not pair_rows:
-        return spark.createDataFrame([], empty)
-    q_ex = spark.createDataFrame(
-        pair_rows,
-        f"__qid {qid_type}, __qvec array<double>, tbl bigint, bkt bigint",
-    )
-    pairs = {(t, b) for _, _, t, b in pair_rows}
-    pred = _reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("tbl") == t) & (F.col("bkt") == b)
-            for t, b in sorted(pairs)
-        ],
-    )
     # Listing-level pruning (r15, guide §6): a plain
     # spark.read.parquet(root) runs partition DISCOVERY over every
     # leaf directory of the store (2^n_bits x n_tables dirs) on the
@@ -1541,11 +1488,18 @@ def lsh_ann_topk_stored(
     base = store_path.rstrip("/")
     leaf = [
         p
-        for p in (f"{base}/tbl={t}/bkt={b}" for t, b in sorted(pairs))
+        for p in (f"{base}/tbl={t}/bkt={b}" for t, b in pairs)
         if _store_exists(spark, p)
     ]
     if not leaf:
         return spark.createDataFrame([], empty)
+    pred = _reduce(
+        lambda a, b: a | b,
+        [
+            (F.col("tbl") == t) & (F.col("bkt") == b)
+            for t, b in pairs
+        ],
+    )
     store = (
         spark.read.schema(f"{id_col} {id_type}, tbl int, bkt bigint")
         .option("basePath", base)
@@ -1553,7 +1507,7 @@ def lsh_ann_topk_stored(
         .filter(pred)
     )
     cand = (
-        store.join(F.broadcast(q_ex), on=["tbl", "bkt"])
+        store.join(F.broadcast(probes), on=["tbl", "bkt"])
         .filter(F.col(id_col) != F.col("__qid"))
         .groupBy("__qid", id_col)
         .agg(F.first("__qvec").alias("__qvec"))

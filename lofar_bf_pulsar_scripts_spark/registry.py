@@ -15,6 +15,7 @@ parquet tables. Conventions that make the hash comparison exact:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -40,17 +41,35 @@ class QuerySpec:
 _SPECS: list[QuerySpec] = []
 
 
+@functools.cache
+def _store_code_digest() -> str:
+    """sha256 over the sources of the at-rest store builders
+    (plans/lake.py, operators/similarity.py, operators/dedup.py)."""
+    import hashlib
+    import os
+
+    h = hashlib.sha256()
+    root = os.path.dirname(os.path.abspath(__file__))
+    for rel in ("plans/lake.py", "operators/similarity.py",
+                "operators/dedup.py"):
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def _lsh_store_path(sf_dir: str, src_table: str = "embeddings", **params) -> str:
-    """Deterministic per-(source data, params) location for an
-    at-rest derived store (LSH signatures / PQ codes / MinHash bands)
-    under the system tempdir, so repeated gate/bench runs in one
-    container reuse the build. The key includes the SOURCE parquet's
-    (size, mtime) fingerprint — pass src_table to name the table the
-    store is actually derived from (e.g. 'documents' for the MinHash
-    band store), so regenerating that table IN PLACE at the same
-    sf_dir moves the key and a cached store built from old data can
-    never be silently probed against new data (the same
-    stale-artifact hazard caldata's sha256 manifest guards)."""
+    """Deterministic per-(source data, builder code, params) location
+    for an at-rest derived store (LSH signatures / PQ codes / MinHash
+    bands) under the system tempdir, so repeated gate/bench runs in
+    one container reuse the build. The key includes the SOURCE
+    parquet's (size, mtime) fingerprint — pass src_table to name the
+    table the store is actually derived from (e.g. 'documents' for
+    the MinHash band store), so regenerating that table IN PLACE at
+    the same sf_dir moves the key and a cached store built from old
+    data can never be silently probed against new data (the same
+    stale-artifact hazard caldata's sha256 manifest guards).  The key
+    also includes ``_store_code_digest()``: a store written by an
+    older version of a builder is never read by a newer one."""
     import hashlib
     import os
     import tempfile
@@ -66,6 +85,8 @@ def _lsh_store_path(sf_dir: str, src_table: str = "embeddings", **params) -> str
             os.path.abspath(sf_dir)
             + "|"
             + fingerprint
+            + "|"
+            + _store_code_digest()
             + "|"
             + repr(sorted(params.items()))
         ).encode()

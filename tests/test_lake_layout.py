@@ -122,13 +122,15 @@ def test_ivf_store_partition_pruning(spark, tmp_path):
 
 
 def test_lsh_signature_store_partition_pruning(spark, tmp_path):
+    import numpy as np
+
     from lofar_bf_pulsar_scripts_spark.plans.lake import (
         explain_string,
         read_lsh_bucket,
         write_lsh_signatures,
     )
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hyperplane_buckets,
+        _np_sign_lsh,
     )
     from lofar_bf_pulsar_scripts_spark.tables import load_table
 
@@ -137,36 +139,29 @@ def test_lsh_signature_store_partition_pruning(spark, tmp_path):
     )
     path = str(tmp_path / "lsh_store")
     write_lsh_signatures(emb, path, n_tables=2, n_bits=4, dims=64)
-    # pick a (tbl, bkt) known to exist from the column-form signature
-    row = emb.select(
-        "vec_id",
-        F.element_at(
-            hyperplane_buckets(F.col("embedding"), n_tables=2, n_bits=4), 1
-        ).alias("b0"),
-    ).first()
-    probed = read_lsh_bucket(spark, path, 0, int(row["b0"]))
+    # table-0 buckets straight from the kernel, hashed on the driver
+    rows = emb.collect()
+    sig = _np_sign_lsh(
+        np.asarray([r["embedding"] for r in rows], dtype=np.float64),
+        n_tables=2, n_bits=4, dims=64, scale=1e6,
+    )
+    b0 = {r["vec_id"]: int(s) for r, s in zip(rows, sig[:, 0])}
+    # pick a (tbl, bkt) known to exist
+    first = rows[0]["vec_id"]
+    probed = read_lsh_bucket(spark, path, 0, b0[first])
     plan = explain_string(probed)
     head = plan.split("PartitionFilters", 1)[1].splitlines()[0]
     assert "PartitionFilters" in plan and "tbl" in head and "bkt" in head
     ids = {r["vec_id"] for r in probed.collect()}
-    assert int(row["vec_id"]) in ids
+    assert first in ids
     # every row in the probed bucket really carries that signature
-    want = {
-        r["vec_id"]
-        for r in emb.select(
-            "vec_id",
-            F.element_at(
-                hyperplane_buckets(F.col("embedding"), n_tables=2, n_bits=4), 1
-            ).alias("b0"),
-        ).collect()
-        if int(r["b0"]) == int(row["b0"])
-    }
+    want = {i for i, b in b0.items() if b == b0[first]}
     assert ids == want
 
 
 def test_lsh_ann_topk_stored_parity_and_pruning(spark, tmp_path):
     """The store-backed ANN probe (the gate/scale path) returns
-    byte-identical results to the column-form lsh_ann_topk, and its
+    byte-identical results to the in-memory lsh_ann_topk, and its
     store scan is partition-pruned at plan time."""
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
         lsh_ann_topk,
@@ -230,6 +225,23 @@ def test_lsh_ann_topk_stored_keeps_int_id_types(spark, tmp_path):
     # -v flips every hyperplane sign: its buckets hold no corpus vector
     assert probe([(5, [-x for x in v])]) == []
     assert probe([(6, v[:4])]) == []
+
+
+def test_store_path_moves_with_builder_code(monkeypatch):
+    """A store written by another version of the store builders is
+    never read: the at-rest store path keys on a digest of their
+    sources."""
+    from lofar_bf_pulsar_scripts_spark import registry
+
+    sf = "/root/testdata/sf0.001"
+    before = registry._lsh_store_path(sf, n_tables=4, n_bits=6, dims=64)
+    assert registry._lsh_store_path(
+        sf, n_tables=4, n_bits=6, dims=64
+    ) == before
+    monkeypatch.setattr(registry, "_store_code_digest", lambda: "0" * 64)
+    assert registry._lsh_store_path(
+        sf, n_tables=4, n_bits=6, dims=64
+    ) != before
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -836,7 +836,7 @@ def test_wav_metadata_jvm_parse(spark):
 
 def test_lsh_ann_topk_planted_neighbor_and_determinism(spark, vectors):
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hyperplane_buckets,
+        _with_lsh_buckets,
         lsh_ann_topk,
     )
 
@@ -851,12 +851,9 @@ def test_lsh_ann_topk_planted_neighbor_and_determinism(spark, vectors):
     assert top and top[0]["vec_id"] == 1 and top[0]["cos"] > 0.99
     # every candidate shares >= 1 bucket with the query (by construction)
     sigs = {
-        r["vec_id"]: r["sig"]
-        for r in vectors.select(
-            "vec_id",
-            hyperplane_buckets(
-                F.col("embedding"), n_tables=4, n_bits=4, dims=16
-            ).alias("sig"),
+        r["vec_id"]: r["__sig"]
+        for r in _with_lsh_buckets(
+            vectors, "embedding", n_tables=4, n_bits=4, dims=16, scale=1e6
         ).collect()
     }
     for r in top:
@@ -1025,32 +1022,59 @@ def test_canonicalize_url_rules(spark):
         assert got[i] == want, (i, got[i], want)
 
 
-def test_hyperplane_buckets_long_parity(spark, vectors):
-    """The codegen'd long-form signature build (posexplode + broadcast
-    plane join) is bit-identical to the column form."""
-    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hyperplane_buckets,
-        hyperplane_buckets_long,
-    )
+def _sign_lsh_reference(vec, n_tables, n_bits, dims, scale=1e6):
+    """Plain-Python closed form of the sign-LSH buckets: the oracle's
+    arithmetic, one correctly rounded double operation at a time."""
+    import math
 
-    col_form = sorted(
-        (r["vec_id"], r["t"], r["b"])
-        for r in vectors.select(
-            "vec_id",
-            F.posexplode(
-                hyperplane_buckets(
-                    F.col("embedding"), n_tables=3, n_bits=5, dims=16
-                )
-            ).alias("t", "b"),
-        ).collect()
+    out = []
+    for t in range(n_tables):
+        bucket = 0
+        for b in range(n_bits):
+            p = t * n_bits + b
+            acc = 0
+            for i in range(1, dims + 1):
+                h = ((1 + p * dims + i) * 2654435761 % 2**32) / 2**32 - 0.5
+                acc += math.floor(float(vec[i - 1]) * h * scale + 0.5)
+            if acc > 0:
+                bucket += 1 << b
+        out.append(bucket)
+    return out
+
+
+@pytest.mark.parametrize("n_tables,n_bits,dims", [(4, 6, 64), (3, 5, 16)])
+def test_sign_lsh_kernel_matches_closed_form(spark, n_tables, n_bits, dims):
+    """The one sign-LSH kernel, run through its Arrow-batched corpus
+    pass, equals the closed form on every well-formed vector, leaves
+    out short, empty and NULL vectors, and does not depend on the
+    partitioning."""
+    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
+        _with_lsh_buckets,
     )
-    long_form = sorted(
-        (r["vec_id"], r["__tbl"], r["__bkt"])
-        for r in hyperplane_buckets_long(
-            vectors, n_tables=3, n_bits=5, dims=16
-        ).collect()
+    from lofar_bf_pulsar_scripts_spark.tables import load_table
+
+    emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").select(
+        "vec_id", F.slice("embedding", 1, dims).alias("embedding")
     )
-    assert col_form == long_form and len(col_form) == 40 * 3
+    bad = spark.createDataFrame(
+        [(-1, [0.5] * (dims - 1)), (-2, []), (-3, None)],
+        "vec_id long, embedding array<float>",
+    )
+    want = {
+        r["vec_id"]: _sign_lsh_reference(
+            r["embedding"], n_tables, n_bits, dims
+        )
+        for r in emb.collect()
+    }
+    for n in (1, 7):
+        got = {
+            r["vec_id"]: list(r["__sig"])
+            for r in _with_lsh_buckets(
+                emb.union(bad).repartition(n), "embedding",
+                n_tables, n_bits, dims, 1e6,
+            ).collect()
+        }
+        assert got == want and len(got) == 500
 
 
 def test_canonicalize_url_idempotent(spark):
@@ -1304,7 +1328,7 @@ def test_image_metadata_rejects_png_without_ihdr_first(spark):
 
 def test_lsh_ann_topk_malformed_vectors_excluded(spark, vectors):
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
-        hyperplane_buckets_long,
+        _with_lsh_buckets,
         lsh_ann_topk,
     )
 
@@ -1319,11 +1343,12 @@ def test_lsh_ann_topk_malformed_vectors_excluded(spark, vectors):
         with_bad, q, k=40, n_tables=4, n_bits=4, dims=16
     ).collect()
     assert top and all(r["vec_id"] < 200 for r in top)
-    # long form excludes them identically (parity contract)
+    # the kernel's corpus pass (the at-rest store's builder too)
+    # leaves them out
     ids = {
         r["vec_id"]
-        for r in hyperplane_buckets_long(
-            with_bad, n_tables=4, n_bits=4, dims=16
+        for r in _with_lsh_buckets(
+            with_bad, "embedding", n_tables=4, n_bits=4, dims=16, scale=1e6
         ).collect()
     }
     assert 200 not in ids and 201 not in ids

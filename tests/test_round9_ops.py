@@ -68,6 +68,27 @@ def test_routing_tree_three_levels_matches_flat_on_separated(spark):
     assert got == flat
 
 
+def test_assign_overwrites_cell_column_and_drops_null_vectors(spark):
+    """Re-assigning an already-assigned frame overwrites its cell
+    column instead of adding a second one, at one level (ivf_assign)
+    and at two; a NULL vector gets no cell."""
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid long, embedding array<double>"
+    )
+    corpus = spark.createDataFrame(
+        [(0, [2.0, 0.5], 7), (1, [0.1, 3.0], 7), (2, None, 7)],
+        "vec_id long, embedding array<double>, cid long",
+    )
+    l1 = cents.filter("cid = 0").select(F.col("cid").alias("g1"), "embedding")
+    fine_g = ivf_assign(cents, l1, id_col="cid", centroid_id_col="g1")
+    for out in (
+        ivf_assign(corpus, cents),
+        routing_tree_assign(corpus, [l1, fine_g], ["g1", "cid"]),
+    ):
+        assert out.columns == ["vec_id", "embedding", "cid"]
+        assert {r["vec_id"]: r["cid"] for r in out.collect()} == {0: 0, 1: 1}
+
+
 def test_routing_tree_childless_cells_never_drop_vectors(spark):
     """A level-1 cell with no descendants must receive no traffic —
     every vector still gets an assignment (the ownership
