@@ -891,6 +891,10 @@ def dhash_gray(
     )
 
 
+# phash_near_dup_pairs' most recent persisted hash proxy
+_last_hash_proxy: DataFrame | None = None
+
+
 def phash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -960,10 +964,24 @@ def phash_near_dup_pairs(
     # executor loss kills the job at 100 TB instead of recomputing).
     # Measured sf0.1 min-of-4 (r14, checkpoint): full query 4.62 ->
     # ~1.4 s; the persist form A/B-matches it (r15).
+    # The returned frame is lazy, so its proxy stays cached until the
+    # caller's action; the PREVIOUS call's proxy is released here, so a
+    # session holds one corpus-sized disk cache however many inputs it
+    # hashes.  A repeat call on the same input keeps and reuses its
+    # cache.
     from pyspark import StorageLevel
 
+    global _last_hash_proxy
+    prev = _last_hash_proxy
+    if (
+        prev is not None
+        and prev.sparkSession is hashed.sparkSession
+        and not prev.sameSemantics(hashed)
+    ):
+        prev.unpersist()
     hashed = hashed.persist(StorageLevel.DISK_ONLY)
     hashed.count()  # populate the cache eagerly (all columns)
+    _last_hash_proxy = hashed
     exploded = hashed.select(
         "__id",
         *[F.col(f"b{i}") for i in range(n_bands)],

@@ -94,129 +94,175 @@ def _lsh_store_path(sf_dir: str, src_table: str = "embeddings", **params) -> str
     return os.path.join(tempfile.gettempdir(), f"lofar_spark_lsh_{key}")
 
 
-def _ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
-    """The corpus MinHash band store's deterministic location, built
-    on first use — ONE helper for every consumer (prebuild_stores,
-    the incremental-CC inputs, the forget gate): a drifted copy of
-    the (nh, k, b, r) parameters would silently build/probe a
-    DIFFERENT store at a different key (round-12 review)."""
-    path = _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="minhash_bands", nh=_NUM_MINHASH, k=3, b=4, r=2,
+# Every at-rest store has ONE `_ensure_<store>(spark, sf_dir) -> path`
+# helper that owns both its key parameters and its builder parameters:
+# ensure_* is first-build-wins, so a drifted copy of a parameter would
+# silently build or probe a DIFFERENT store at a different key.  Every
+# gate reaches a store through its helper, and prebuild_stores walks
+# the _STORES table of helpers (tests/test_lake_layout.py pins both).
+
+# sign-LSH store geometry: its key, its builder and every probe of it
+_LSH = dict(n_tables=4, n_bits=6, dims=64)
+_NUM_MINHASH = 8
+# corpus MinHash band geometry, part of the band and components keys
+_BAND_KEY = dict(nh=_NUM_MINHASH, k=3, b=4, r=2)
+
+
+def _cent8(e: DataFrame) -> DataFrame:
+    """The first 8 vectors as IVF centroids: the codebook of the
+    ivf_cid and pq stores and of the gates that probe them."""
+    return e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), "embedding"
     )
-    from .plans.lake import ensure_minhash_bands
 
-    ensure_minhash_bands(
-        load_table(spark, "documents", sf_dir), path,
-        num_hashes=_NUM_MINHASH, shingle_k=3, bands=4, rows_per_band=2,
+
+def _is_old(c):
+    """Deterministic 80/20 old/new split of the id space for the
+    incremental-components gate: LSH pairs are per-bucket, so old-old
+    pairs from the full band store equal the pairs a band store over
+    only the old docs would hold."""
+    return F.pmod(c, F.lit(10)) < 8
+
+
+def _ensure_lsh_signatures(spark: SparkSession, sf_dir: str) -> str:
+    from .plans.lake import ensure_lsh_signatures
+
+    return ensure_lsh_signatures(
+        load_table(spark, "embeddings", sf_dir),
+        _lsh_store_path(sf_dir, **_LSH), **_LSH,
     )
-    return path
 
 
-def prebuild_stores(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Build every at-rest derived store the registry queries probe
-    (LSH signatures, PQ codes, SemDeDup cid-partitioned assignment),
-    timing each family. bench.py calls this BEFORE the canary so a
-    cold container's one-time store builds are reported as their own
-    record field instead of masquerading as a probe regression inside
-    the first query of each store family (VERDICT r7 item 4). The
-    params below replicate the gate queries' calls exactly — ensure_*
-    is first-build-wins, so the store content must be identical."""
-    import time as _time
-
+def _ensure_pq_codes(spark: SparkSession, sf_dir: str) -> str:
+    """8-centroid IVF assignment, 4x16 PQ codes."""
     from .operators.similarity import ivf_assign
-    from .plans.lake import (
-        ensure_embeddings_by_centroid,
-        ensure_lsh_signatures,
-        ensure_pq_codes,
-    )
+    from .plans.lake import ensure_pq_codes
 
     e = load_table(spark, "embeddings", sf_dir)
-    out: dict[str, float] = {}
-
-    t0 = _time.time()
-    ensure_lsh_signatures(
-        e,
-        _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64),
-        n_tables=4, n_bits=6, dims=64,
+    pq = dict(dims=64, m_sub=4, k_codes=16)
+    return ensure_pq_codes(
+        ivf_assign(e, _cent8(e)), _lsh_store_path(sf_dir, kind="pq", **pq),
+        **pq,
     )
-    out["lsh_signatures"] = round(_time.time() - t0, 3)
 
-    # mirrors q_ivf_pq_stored_top3: 8-centroid codebook, 4x16 PQ
-    cent8 = e.filter(F.col("vec_id") < 8).select(
+
+def _ensure_semdedup_store(spark: SparkSession, sf_dir: str) -> str:
+    """The SemDeDup assignment over a k-proportional-to-N codebook:
+    every 64th vector (k = N/64, so occupancy stays ~64 as the corpus
+    grows); production uses a kmeans_fit codebook of the same size
+    law."""
+    from .operators.similarity import ivf_assign
+    from .plans.lake import ensure_embeddings_by_centroid
+
+    stride = 64
+    e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    cent = e.filter(F.pmod(F.col("vec_id"), F.lit(stride)) == 0).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    t0 = _time.time()
-    ensure_pq_codes(
-        ivf_assign(e, cent8),
-        _lsh_store_path(sf_dir, kind="pq", dims=64, m_sub=4, k_codes=16),
-        dims=64, m_sub=4, k_codes=16,
+    return ensure_embeddings_by_centroid(
+        ivf_assign(e, cent),
+        _lsh_store_path(sf_dir, kind="semdedup", stride=stride),
     )
-    out["pq_codes"] = round(_time.time() - t0, 3)
 
-    # mirrors q_semantic_dedup_stats: k-proportional-to-N (stride 64)
-    e2 = e.select("vec_id", "embedding")
-    cent64 = e2.filter(F.pmod(F.col("vec_id"), F.lit(64)) == 0).select(
-        F.col("vec_id").alias("cid"), "embedding"
+
+def _ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus MinHash band store (documents table)."""
+    from .plans.lake import ensure_minhash_bands
+
+    return ensure_minhash_bands(
+        load_table(spark, "documents", sf_dir),
+        _lsh_store_path(
+            sf_dir, src_table="documents", kind="minhash_bands", **_BAND_KEY
+        ),
+        num_hashes=_BAND_KEY["nh"], shingle_k=_BAND_KEY["k"],
+        bands=_BAND_KEY["b"], rows_per_band=_BAND_KEY["r"],
     )
-    t0 = _time.time()
-    ensure_embeddings_by_centroid(
-        ivf_assign(e2, cent64),
-        _lsh_store_path(sf_dir, kind="semdedup", stride=64),
+
+
+def _ensure_components_store(spark: SparkSession, sf_dir: str) -> str:
+    """Connected components of the old-80% docs' band-store candidate
+    pairs (the production flow this models clusters at ingest and
+    only merges nightly batches)."""
+    from .operators.dedup import candidate_pairs
+    from .operators.pipeline import connected_components
+    from .plans.lake import ensure_components_store
+
+    def old_components():
+        # a thunk: the union-find collect only runs on the one build
+        pairs = candidate_pairs(
+            spark.read.parquet(_ensure_band_store(spark, sf_dir)), "doc_id"
+        )
+        return connected_components(
+            pairs.filter(_is_old(F.col("id_a")) & _is_old(F.col("id_b"))),
+            src_col="id_a", dst_col="id_b",
+        )
+
+    return ensure_components_store(
+        old_components,
+        _lsh_store_path(
+            sf_dir, src_table="documents", kind="components_old80",
+            **_BAND_KEY,
+        ),
     )
-    out["semdedup_assign"] = round(_time.time() - t0, 3)
 
-    # mirrors q_incremental_near_dup: corpus MinHash band store
-    t0 = _time.time()
-    _ensure_band_store(spark, sf_dir)
-    out["minhash_bands"] = round(_time.time() - t0, 3)
 
-    # mirrors q_incremental_components: old-80% components store
-    # (derived from the band store just built above)
-    t0 = _time.time()
-    _ensure_incr_components_inputs(spark, sf_dir)
-    out["components_store"] = round(_time.time() - t0, 3)
-
-    # mirrors q_trained_pq_adc_top3: OPQ rotation + Lloyd codebooks +
-    # one Arrow-batched encode pass (the expensive ingest-time build
-    # the rows-only gate probes)
-    t0 = _time.time()
+def _ensure_trained_pq_store(spark: SparkSession, sf_dir: str) -> str:
+    """OPQ rotation + Lloyd codebooks + one Arrow-batched encode pass.
+    EVERY training parameter is part of the key: a param left out
+    (e.g. max_iter) would silently keep probing a store trained under
+    the OLD value.  train_stride="auto" resolves the corpus count
+    INSIDE the one build — a warm probe pays a filesystem stat, never
+    a count job."""
     from .plans.lake import ensure_trained_pq_store
 
-    ensure_trained_pq_store(
-        e.select("vec_id", "embedding"), _trained_pq_store_path(sf_dir),
+    return ensure_trained_pq_store(
+        load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding"),
+        _lsh_store_path(
+            sf_dir, kind="trained_pq", dims=64, m_sub=8, k_codes=16,
+            mi=4, ts="auto", layout="pb64",
+        ),
         dims=64, m_sub=8, k_codes=16, max_iter=4, train_stride="auto",
     )
-    out["trained_pq_store"] = round(_time.time() - t0, 3)
 
-    # mirrors q_ivf_topk_filtered: exact-vector cid store (8-centroid
-    # codebook, label travels with the row for filtered ANN)
-    t0 = _time.time()
-    ensure_embeddings_by_centroid(
-        ivf_assign(e, cent8), _lsh_store_path(sf_dir, kind="ivf_cid", ncent=8)
+
+def _ensure_ivf_cid_store(spark: SparkSession, sf_dir: str) -> str:
+    """Exact vectors partitioned by their 8-centroid cell; the label
+    travels with the row for filtered ANN."""
+    from .operators.similarity import ivf_assign
+    from .plans.lake import ensure_embeddings_by_centroid
+
+    e = load_table(spark, "embeddings", sf_dir)
+    return ensure_embeddings_by_centroid(
+        ivf_assign(e, _cent8(e)),
+        _lsh_store_path(sf_dir, kind="ivf_cid", ncent=8),
     )
-    out["ivf_cid_store"] = round(_time.time() - t0, 3)
 
-    # mirrors q_trained_ivf_pq_rerank_top3: trained coarse quantizer
-    # + OPQ/Lloyd PQ model + cid-partitioned codes & vectors tiers
-    t0 = _time.time()
+
+def _ensure_trained_ivf_pq_store(spark: SparkSession, sf_dir: str) -> str:
+    """Trained coarse quantizer + OPQ/Lloyd PQ model + cid-partitioned
+    codes and vectors tiers; every training parameter is keyed (the
+    trained-PQ store discipline)."""
     from .plans.lake import ensure_trained_ivf_pq_store
 
-    ensure_trained_ivf_pq_store(
-        e.select("vec_id", "embedding"),
-        _trained_ivf_pq_store_path(sf_dir),
+    return ensure_trained_ivf_pq_store(
+        load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding"),
+        _lsh_store_path(
+            sf_dir, kind="trained_ivf_pq", dims=64, nc=16, m_sub=8,
+            k_codes=16, mi=4, ki=4, ts="auto", layout="cid", res=0,
+        ),
         dims=64, n_centroids=16, m_sub=8, k_codes=16,
         max_iter=4, kmeans_iter=4, train_stride="auto",
     )
-    out["trained_ivf_pq_store"] = round(_time.time() - t0, 3)
 
-    # mirrors q_trained_ivf_pq_upsert's immutable PRE-upsert store
-    # (the gate copies it and upserts the copy each run)
-    t0 = _time.time()
-    ensure_trained_ivf_pq_store(
-        e.select("vec_id", "embedding").filter(
-            F.pmod(F.col("vec_id"), F.lit(3)) != 2
-        ),
+
+def _ensure_tivf_upsert_base_store(spark: SparkSession, sf_dir: str) -> str:
+    """The trained_ivf_pq_upsert gate's immutable PRE-upsert store
+    (base = vec_id % 3 != 2); the gate upserts a copy of it each run."""
+    from .plans.lake import ensure_trained_ivf_pq_store
+
+    e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    return ensure_trained_ivf_pq_store(
+        e.filter(F.pmod(F.col("vec_id"), F.lit(3)) != 2),
         _lsh_store_path(
             sf_dir, kind="tivf_upsert_gate_base", dims=64, nc=8,
             m_sub=8, k_codes=16, mi=2, ki=2, ts=1,
@@ -224,7 +270,35 @@ def prebuild_stores(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         dims=64, n_centroids=8, m_sub=8, k_codes=16,
         max_iter=2, kmeans_iter=2, train_stride=1,
     )
-    out["tivf_upsert_base_store"] = round(_time.time() - t0, 3)
+
+
+# prebuild_stores' order and record keys (bench's store_build_sec)
+_STORES: dict[str, Callable[[SparkSession, str], str]] = {
+    "lsh_signatures": _ensure_lsh_signatures,
+    "pq_codes": _ensure_pq_codes,
+    "semdedup_assign": _ensure_semdedup_store,
+    "minhash_bands": _ensure_band_store,
+    "components_store": _ensure_components_store,
+    "trained_pq_store": _ensure_trained_pq_store,
+    "ivf_cid_store": _ensure_ivf_cid_store,
+    "trained_ivf_pq_store": _ensure_trained_ivf_pq_store,
+    "tivf_upsert_base_store": _ensure_tivf_upsert_base_store,
+}
+
+
+def prebuild_stores(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """Build every at-rest derived store the registry queries probe,
+    timing each, so a cold container's one-time store builds are
+    reported as their own record field instead of masquerading as a
+    probe regression inside the first query of each store family
+    (VERDICT r7 item 4)."""
+    import time as _time
+
+    out: dict[str, float] = {}
+    for name, ensure in _STORES.items():
+        t0 = _time.time()
+        ensure(spark, sf_dir)
+        out[name] = round(_time.time() - t0, 3)
     return out
 
 
@@ -1339,9 +1413,6 @@ def q_doc_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NUM_MINHASH = 8
-
-
 def _minhash_x_sql(shingle_expr: str) -> str:
     """28-bit md5-nibble hash, identical to dedup._md5_int28."""
     out = "0"
@@ -1834,17 +1905,9 @@ def _incremental_near_dup_oracle(tau_num: int = 5, tau_den: int = 10) -> str:
 )
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_near_dup
-    from .plans.lake import ensure_minhash_bands
 
     d = load_table(spark, "documents", sf_dir)
-    store = _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="minhash_bands", nh=_NUM_MINHASH, k=3, b=4, r=2,
-    )
-    ensure_minhash_bands(
-        d, store, num_hashes=_NUM_MINHASH, shingle_k=3,
-        bands=4, rows_per_band=2,
-    )
+    store = _ensure_band_store(spark, sf_dir)
     batch = d.filter("doc_id % 41 = 7")
     return incremental_near_dup(
         batch, d, spark.read.parquet(store), tau_num=5, tau_den=10
@@ -2409,21 +2472,16 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(label filter) compose in one scan (similarity.py scale path)",
 )
 def q_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign, ivf_topk
-    from .plans.lake import ensure_embeddings_by_centroid
+    from .operators.similarity import ivf_topk
 
     e = load_table(spark, "embeddings", sf_dir)
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
+    cent = _cent8(e)
     # the exact-vector cid store (label travels with the row): the
     # assign is paid once at ingest, a filtered probe is a
     # partition-pruned scan whose label predicate pushes down to the
     # parquet reader — PushedFilters + the cid pruning compose, so a
     # "label IN (...)" restriction costs LESS IO, not a post-scan pass
-    store = _lsh_store_path(sf_dir, kind="ivf_cid", ncent=8)
-    ensure_embeddings_by_centroid(ivf_assign(e, cent), store)
-    stored = spark.read.parquet(store)
+    stored = spark.read.parquet(_ensure_ivf_cid_store(spark, sf_dir))
     queries_df = e.filter(
         (F.col("vec_id") >= 8) & (F.col("vec_id") < 13)
     ).select(F.col("vec_id").alias("qid"), "embedding")
@@ -2599,17 +2657,14 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-hashed — the 100 TB shape of lsh_ann_topk, parity-gated",
 )
 def q_lsh_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     e = load_table(spark, "embeddings", sf_dir)
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
+    store = _ensure_lsh_signatures(spark, sf_dir)
     queries_df = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
-    out = lsh_ann_topk_stored(
-        e, queries_df, store, k=5, n_tables=4, n_bits=6, dims=64
-    )
+    out = lsh_ann_topk_stored(e, queries_df, store, k=5, **_LSH)
     return out.select("qid", "vec_id", F.round("cos", 6).alias("cos"))
 
 
@@ -2659,7 +2714,7 @@ def q_lsh_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_lsh_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ann_recall, brute_force_topk
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     e = load_table(spark, "embeddings", sf_dir)
     queries_df = e.filter(F.col("vec_id") < 5).select(
@@ -2669,11 +2724,8 @@ def q_lsh_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buckets/results as the inline lsh_ann_topk, parity-pinned) —
     # the recall harness measures the PRODUCTION probe path and skips
     # the inline form's one-time multi-second signature codegen
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
-    approx = lsh_ann_topk_stored(
-        e, queries_df, store, k=5, n_tables=4, n_bits=6, dims=64
-    )
+    store = _ensure_lsh_signatures(spark, sf_dir)
+    approx = lsh_ann_topk_stored(e, queries_df, store, k=5, **_LSH)
     exact = brute_force_topk(e, queries_df, k=5)
     out = ann_recall(approx, exact, k=5)
     return out.select("qid", F.round("recall", 6).alias("recall"))
@@ -6882,16 +6934,11 @@ def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ivf_pq_stored_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_assign, ivf_pq_topk
-    from .plans.lake import ensure_pq_codes
 
     e = load_table(spark, "embeddings", sf_dir)
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
+    cent = _cent8(e)
     corpus = ivf_assign(e, cent)
-    store = _lsh_store_path(sf_dir, kind="pq", dims=64, m_sub=4, k_codes=16)
-    ensure_pq_codes(corpus, store, dims=64, m_sub=4, k_codes=16)
-    codes = spark.read.parquet(store)
+    codes = spark.read.parquet(_ensure_pq_codes(spark, sf_dir))
     queries_df = e.filter(
         (F.col("vec_id") >= 8) & (F.col("vec_id") < 13)
     ).select(F.col("vec_id").alias("qid"), "embedding")
@@ -7104,7 +7151,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .operators.retrieval import bm25_topk, rrf_fuse
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     d = load_table(spark, "documents", sf_dir)
     e = load_table(spark, "embeddings", sf_dir)
@@ -7122,12 +7169,10 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate probe + candidate-only scoring, never a per-query
     # corpus scan — the measured recall envelope vs the exact top-20
     # is pinned in tests/test_round11_hybrid.py and SCALE.md
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
+    store = _ensure_lsh_signatures(spark, sf_dir)
     w_cos = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
     cs = lsh_ann_topk_stored(
-        e, qv, store, k=20, n_tables=4, n_bits=6, dims=64,
-        hamming_probes=6,
+        e, qv, store, k=20, hamming_probes=6, **_LSH
     ).select(
         F.col("vec_id").alias("doc_id"),
         F.row_number().over(w_cos).alias("rank"),
@@ -7954,25 +7999,13 @@ _SEMDEDUP_TAU = 0.4
     "cid — never all-pairs); assign paid once at ingest",
 )
 def q_semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign, semantic_dedup
-    from .plans.lake import ensure_embeddings_by_centroid
+    from .operators.similarity import semantic_dedup
 
-    # k-proportional-to-N codebook: every 64th vector (k = N/64, so
-    # occupancy stays ~64 as the corpus grows); production uses a
-    # kmeans_fit codebook of the same size law
-    e = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding"
-    )
-    cent = e.filter(F.pmod(F.col("vec_id"), F.lit(64)) == 0).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
     # the assignment is materialized ONCE to the cid-partitioned
     # at-rest store (PQ/LSH store precedent) and every invocation —
     # and every other consumer (IVF probes, slice dedup) — reads it
     # back partition-prunable instead of re-running the assign
-    store = _lsh_store_path(sf_dir, kind="semdedup", stride=64)
-    ensure_embeddings_by_centroid(ivf_assign(e, cent), store)
-    assigned = spark.read.parquet(store)
+    assigned = spark.read.parquet(_ensure_semdedup_store(spark, sf_dir))
     out = semantic_dedup(assigned, _SEMDEDUP_TAU)
     return out.withColumn("cid", F.col("cid").cast("long"))
 
@@ -9602,48 +9635,23 @@ def q_quality_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _components_store_path(sf_dir: str) -> str:
-    """The old-80% components store's deterministic location — shared
-    by the gate and prebuild_stores so bench charges the build to the
-    store_build field, not to the first gate run."""
-    return _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="components_old80", nh=_NUM_MINHASH, k=3, b=4, r=2,
-    )
-
-
-def _ensure_incr_components_inputs(spark: SparkSession, sf_dir: str):
+def _incr_components_inputs(spark: SparkSession, sf_dir: str):
     """(stored_components, batch_edges) for the incremental-CC gate,
     both served from at-rest stores: candidate pairs come from the
     persisted MinHash band store (no per-run re-shingle of the
     corpus) and the old-80% component labels from the components
-    store (built once; the production flow this models clusters at
-    ingest and only merges nightly batches)."""
+    store."""
     from .operators.dedup import candidate_pairs
-    from .operators.pipeline import connected_components
-    from .plans.lake import (
-        ensure_components_store,
-        read_components_store,
-    )
+    from .plans.lake import read_components_store
 
-    band_path = _ensure_band_store(spark, sf_dir)
-    pairs = candidate_pairs(spark.read.parquet(band_path), "doc_id")
-    # deterministic 80/20 old/new split of the id space: LSH pairs
-    # are per-bucket, so old-old pairs from the full band store equal
-    # the pairs a band store over only the old docs would hold
-    is_old = lambda c: F.pmod(c, F.lit(10)) < 8  # noqa: E731
-    comp_path = _components_store_path(sf_dir)
-    ensure_components_store(
-        # thunk: the union-find collect only runs on the one build
-        lambda: connected_components(
-            pairs.filter(is_old(F.col("id_a")) & is_old(F.col("id_b"))),
-            src_col="id_a", dst_col="id_b",
-        ),
-        comp_path,
+    stored = read_components_store(
+        spark, _ensure_components_store(spark, sf_dir)
     )
-    stored = read_components_store(spark, comp_path)
+    pairs = candidate_pairs(
+        spark.read.parquet(_ensure_band_store(spark, sf_dir)), "doc_id"
+    )
     batch_edges = pairs.filter(
-        ~(is_old(F.col("id_a")) & is_old(F.col("id_b")))
+        ~(_is_old(F.col("id_a")) & _is_old(F.col("id_b")))
     )
     return stored, batch_edges
 
@@ -9673,7 +9681,7 @@ def _ensure_incr_components_inputs(spark: SparkSession, sf_dir: str):
 def q_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pipeline import merge_components_incremental
 
-    stored, batch_edges = _ensure_incr_components_inputs(spark, sf_dir)
+    stored, batch_edges = _incr_components_inputs(spark, sf_dir)
     return merge_components_incremental(stored, batch_edges)
 
 
@@ -9729,16 +9737,6 @@ def q_delete_closure_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trained_pq_store_path(sf_dir: str) -> str:
-    # EVERY training parameter is part of the key: ensure_* is
-    # first-build-wins, so a param left out (e.g. max_iter) would
-    # silently keep probing a store trained under the OLD value
-    return _lsh_store_path(
-        sf_dir, kind="trained_pq", dims=64, m_sub=8, k_codes=16,
-        mi=4, ts="auto", layout="pb64",
-    )
-
-
 @_register(
     "trained_pq_adc_top3",
     # rows-only BY DESIGN: the store's codebooks come from Lloyd's
@@ -9758,32 +9756,16 @@ def _trained_pq_store_path(sf_dir: str) -> str:
     "read (plans/lake.py build_trained_pq_store / trained_pq_topk)",
 )
 def q_trained_pq_adc_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.lake import ensure_trained_pq_store, trained_pq_topk
+    from .plans.lake import trained_pq_topk
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    path = _trained_pq_store_path(sf_dir)
-    # train_stride="auto" resolves the corpus count INSIDE the one
-    # build — a warm probe pays a filesystem stat, never a count job
-    ensure_trained_pq_store(
-        e, path, dims=64, m_sub=8, k_codes=16, max_iter=4,
-        train_stride="auto",
-    )
+    path = _ensure_trained_pq_store(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
     return trained_pq_topk(spark, path, queries, topk=3)
-
-
-def _trained_ivf_pq_store_path(sf_dir: str) -> str:
-    # EVERY training parameter is part of the key (the trained-PQ
-    # store discipline): a param left out would silently keep probing
-    # a store built under the OLD value
-    return _lsh_store_path(
-        sf_dir, kind="trained_ivf_pq", dims=64, nc=16, m_sub=8,
-        k_codes=16, mi=4, ki=4, ts="auto", layout="cid", res=0,
-    )
 
 
 @_register(
@@ -9809,19 +9791,12 @@ def _trained_ivf_pq_store_path(sf_dir: str) -> str:
 def q_trained_ivf_pq_rerank_top3(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .plans.lake import (
-        ensure_trained_ivf_pq_store,
-        trained_ivf_pq_rerank_topk,
-    )
+    from .plans.lake import trained_ivf_pq_rerank_topk
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    path = _trained_ivf_pq_store_path(sf_dir)
-    ensure_trained_ivf_pq_store(
-        e, path, dims=64, n_centroids=16, m_sub=8, k_codes=16,
-        max_iter=4, kmeans_iter=4, train_stride="auto",
-    )
+    path = _ensure_trained_ivf_pq_store(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
@@ -9886,27 +9861,15 @@ def q_trained_ivf_pq_rerank_top3(
 def q_trained_ivf_pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from .plans.lake import (
-        ensure_trained_ivf_pq_store,
-        upsert_trained_ivf_pq,
-    )
+    from .plans.lake import upsert_trained_ivf_pq
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    base = e.filter(F.pmod(F.col("vec_id"), F.lit(3)) != 2)
     # the PRE-upsert store is immutable and deterministic — build it
     # once per (source, params) like every other trained store (the
     # 8 codebook fits are ~60 s of pure job scheduling otherwise)...
-    base_store = ensure_trained_ivf_pq_store(
-        base,
-        _lsh_store_path(
-            sf_dir, kind="tivf_upsert_gate_base", dims=64, nc=8,
-            m_sub=8, k_codes=16, mi=2, ki=2, ts=1,
-        ),
-        dims=64, n_centroids=8, m_sub=8, k_codes=16,
-        max_iter=2, kmeans_iter=2, train_stride=1,
-    )
+    base_store = _ensure_tivf_upsert_base_store(spark, sf_dir)
     # ...then upsert into a fresh COPY each run (the forget-gate
     # discipline: mutating the cached store would gate a no-op on the
     # second run)
@@ -10006,10 +9969,7 @@ def q_forget_documents_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(8)).cast("int"))
         .write.partitionBy("shard").parquet(doc_path)
     )
-    cent8 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
-    write_embeddings_by_centroid(ivf_assign(e, cent8), vec_path)
+    write_embeddings_by_centroid(ivf_assign(e, _cent8(e)), vec_path)
     forget_documents(
         spark, doc_path, list(_CLOSURE_SEEDS),
         vec_store=vec_path, edges=edges,

@@ -244,6 +244,34 @@ def test_store_path_moves_with_builder_code(monkeypatch):
     ) != before
 
 
+def test_store_builders_reached_only_through_store_helpers():
+    """Each at-rest store is declared once: only the `_ensure_<store>`
+    helpers of registry._STORES (the table prebuild_stores walks) call
+    a plans.lake ensure_* builder, and every `_ensure_*` name a gate
+    uses is one of them."""
+    import ast
+    import inspect
+
+    from lofar_bf_pulsar_scripts_spark import registry
+    from lofar_bf_pulsar_scripts_spark.plans import lake
+
+    builders = {n for n in dir(lake) if n.startswith("ensure_")}
+    helpers = {f.__name__ for f in registry._STORES.values()}
+    for fn in ast.parse(inspect.getsource(registry)).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        used = set()
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.ImportFrom):
+                used.update(a.name for a in node.names)
+        if used & builders:
+            assert fn.name in helpers, (fn.name, sorted(used & builders))
+        stray = {n for n in used if n.startswith("_ensure_")} - helpers
+        assert not stray, (fn.name, sorted(stray))
+
+
 def test_salted_join_equals_plain_join(spark):
     from lofar_bf_pulsar_scripts_spark.operators.skew import salted_join
     from lofar_bf_pulsar_scripts_spark.tables import load_table

@@ -1924,3 +1924,33 @@ def test_phash_near_dup_banding_recall(spark):
 
     with _pytest.raises(ValueError):
         phash_near_dup_pairs(df, "doc_id", "text", max_dist=4, n_bands=4)
+
+
+def test_phash_near_dup_keeps_one_hash_proxy_cached(spark):
+    """Each call persists its hash proxy (DISK_ONLY); a call on a new
+    input releases the previous call's, so repeated calls never pile
+    up corpus-sized disk caches, and a repeat on the same input reuses
+    its cache."""
+    from pyspark.sql import functions as F
+
+    from lofar_bf_pulsar_scripts_spark.operators.multimodal import (
+        phash_near_dup_pairs,
+    )
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    a = spark.createDataFrame(
+        [(i, f"doc {i % 7} " * (3 + i % 5)) for i in range(40)],
+        "doc_id long, text string",
+    )
+    b = a.withColumn("text", F.upper("text"))
+    want = sorted(phash_near_dup_pairs(a, "doc_id", "text").collect())
+    assert want
+    after_first = persisted()
+    phash_near_dup_pairs(b, "doc_id", "text").collect()
+    assert persisted() == after_first
+    for _ in range(2):
+        got = phash_near_dup_pairs(a, "doc_id", "text").collect()
+        assert sorted(got) == want
+        assert persisted() == after_first

@@ -7,6 +7,10 @@ execution, noop sink, min over N passes — default 3) but only for the
 named queries, so an optimization loop gets a per-query read in
 seconds instead of a full 8-minute bench sweep.  Prints one line per
 query: ``<name> <min> s  (passes: t1 t2 ...)``.
+
+Times from separate runs also differ by host drift; to compare two
+commits, run ``tools/ab.py``, which alternates runs of this script
+between them.
 """
 
 from __future__ import annotations
