@@ -187,10 +187,121 @@ def _np_self_scores(X, scale: float):
     return prods.astype(np.int64).sum(axis=-1, dtype=np.int64)
 
 
+def _np_l2_scores(X, C, scale: float):
+    """Quantized 2*x.c - |c|^2 per (row, centroid): argmax over it is
+    argmin |x - c|^2, in the integer form the oracle SQL evaluates."""
+    return 2 * _np_quantized_scores(X, C, scale) - _np_self_scores(C, scale)
+
+
+def _np_dot_scores(X, C):
+    """Pairwise dot products s[i, j] = X[i] . C[j] as a sequential
+    float64 fold over the dims in ascending order: one product and one
+    add per dim, in the order the column ``dot`` folds them, so the
+    scores are bit-identical to it."""
+    import numpy as np
+
+    out = np.zeros((len(X), len(C)))
+    for d in range(C.shape[1]):
+        out += X[:, d, None] * C[None, :, d]
+    return out
+
+
+def _np_top_cells(S, n: int):
+    """Column indices of the ``n`` best cells per row of the score
+    matrix ``S``, best first, under the order (score desc, cell id
+    asc) — the columns of ``S`` must be in ascending cell-id order, so
+    the stable sort breaks ties toward the smaller id."""
+    import numpy as np
+
+    return np.argsort(-S, axis=1, kind="stable")[:, :n]
+
+
+def _np_valid(vectors, dims: int):
+    """(mask, X): which of ``vectors`` (an Arrow list array, or
+    collected lists with None for NULL) are usable — non-NULL, exactly
+    ``dims`` long, no NULL or NaN element (a NULL element reads as NaN)
+    — and those vectors as a float64 matrix.  Nearest-cell selection
+    ignores every other vector: it has no nearest cell."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not isinstance(vectors, pa.Array):
+        vectors = pa.array(vectors, type=pa.list_(pa.float64()))
+    mask = pc.fill_null(
+        pc.equal(pc.list_value_length(vectors), dims), False
+    ).to_numpy(zero_copy_only=False).copy()
+    X = (
+        vectors.filter(pa.array(mask)).flatten()
+        .to_numpy(zero_copy_only=False).astype(np.float64)
+        .reshape(int(mask.sum()), dims)
+    )
+    ok = ~np.isnan(X).any(axis=1)
+    mask[mask] = ok
+    return mask, X[ok]
+
+
+def _collect_cells(cells: DataFrame, id_col: str, vec_col: str, *extra):
+    """A codebook-sized cell table on the driver, sorted by cell id:
+    (ids, vectors as a float64 matrix, *extra id columns), each an
+    array over the cells with a usable vector."""
+    import numpy as np
+
+    rows = sorted(
+        cells.select(id_col, vec_col, *extra).collect(), key=lambda r: r[0]
+    )
+    dims = next((len(r[1]) for r in rows if r[1] is not None), 0)
+    keep, C = _np_valid([r[1] for r in rows], dims)
+    ids = np.asarray(
+        [[r[0], *r[2:]] for r in rows], dtype=np.int64
+    ).reshape(len(rows), 1 + len(extra))[keep]
+    return (ids[:, 0], C, *ids[:, 1:].T)
+
+
+def _assign_cells(
+    corpus: DataFrame,
+    vec_col: str,
+    cell_col: str,
+    cell_field: T.StructField,
+    dims: int,
+    route,
+) -> DataFrame:
+    """``corpus`` plus ``cell_col`` = ``route(X)`` (cell ids of the
+    float64 vector matrix ``X``), in ONE Arrow-batched mapInArrow pass
+    that carries every corpus column through: zero exchanges, no
+    id-join back.  Rows whose vector is not usable (``_np_valid``) are
+    DROPPED — a NULL vector has no nearest cell, and parking it on a
+    fixed one would skew that cell's occupancy.  An existing
+    ``cell_col`` is overwritten in place; the column takes the type of
+    ``cell_field``."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = [cell_field if f.name == cell_col else f for f in corpus.schema]
+    if cell_col not in corpus.columns:
+        fields.append(cell_field)
+    names = [f.name for f in fields]
+    cell_type = to_arrow_type(cell_field.dataType)
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            keep, X = _np_valid(b.column(vec_col), dims)
+            if not len(X):
+                continue
+            b = b.filter(pa.array(keep))
+            cols = dict(zip(b.schema.names, b.columns))
+            cols[cell_col] = pa.array(route(X)).cast(cell_type)
+            yield pa.RecordBatch.from_arrays(
+                [cols[n] for n in names], names=names
+            )
+
+    return corpus.mapInArrow(assign, schema=T.StructType(fields))
+
+
 def kmeans_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id_col: str = "cid",
     score_scale: float = 1e12,
@@ -205,49 +316,18 @@ def kmeans_assign(
     in ivf_assign's cosine setting).
 
     The centroids are collected to the driver (a model, never
-    data-sized) and scored in ONE Arrow-batched numpy pass that
-    carries every corpus column through: zero exchanges, no id-join.
-    Output is the corpus columns plus ``centroid_id_col``, typed as
-    in ``centroids``.
+    data-sized) and scored in ONE Arrow-batched numpy pass
+    (``_assign_cells``).  Output is the corpus columns plus
+    ``centroid_id_col``, typed as in ``centroids``; rows whose vector
+    is NULL are dropped, the same contract as ``ivf_assign``."""
+    cids, C = _collect_cells(centroids, centroid_id_col, vec_col)
 
-    Rows whose vector is NULL are DROPPED — a null vector has no
-    nearest centroid — the same contract as ``ivf_assign``.  ``id_col``
-    is unused: the assignment is row-at-a-time and never groups on it."""
-    import numpy as np
+    def route(X):
+        return cids[_np_top_cells(_np_l2_scores(X, C, score_scale), 1)[:, 0]]
 
-    crows = sorted(
-        (
-            (int(r[centroid_id_col]), [float(v) for v in r[vec_col]])
-            for r in centroids.collect()
-        ),
-        key=lambda t: t[0],
-    )
-    cids_np = np.asarray([c0 for c0, _ in crows], dtype=np.int64)
-    C = np.asarray([v for _, v in crows], dtype=np.float64)
-    cc = _np_self_scores(C, score_scale)
-    out_schema = T.StructType(
-        list(corpus.schema) + [centroids.schema[centroid_id_col]]
-    )
-    cols = corpus.columns
-
-    def assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            s = 2 * _np_quantized_scores(X, C, score_scale) - cc
-            # np.argmax returns the FIRST max index; cids are in
-            # ascending order, so ties already break low
-            out = {c0: pdf[c0] for c0 in cols}
-            out[centroid_id_col] = cids_np[np.argmax(s, axis=1)]
-            yield pd.DataFrame(out)
-
-    return corpus.filter(F.col(vec_col).isNotNull()).mapInPandas(
-        assign, schema=out_schema
+    return _assign_cells(
+        corpus, vec_col, centroid_id_col,
+        centroids.schema[centroid_id_col], C.shape[1], route,
     )
 
 
@@ -284,22 +364,20 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id_col: str = "cid",
-    spread: bool = True,
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
     centroid (max dot, ties to the smaller centroid id) — the
-    one-level case of ``routing_tree_assign``: one broadcast
-    candidate array and an in-row argmax fold, zero exchanges on the
-    corpus.  Results are bit-identical to the aggregation form the
-    DuckDB oracles mirror FOR NON-NULL VECTORS.  Rows whose embedding
-    is NULL are DROPPED, by contract: a null vector has no nearest
-    centroid, and parking it on centroid 0 would skew that cell's
-    occupancy (round-10 ADVICE: divergence documented).  An existing
-    ``centroid_id_col`` in the corpus is overwritten; the output
-    column takes the type of the centroids' id column."""
+    one-level case of ``routing_tree_assign``.  Results are
+    bit-identical to the aggregation form the DuckDB oracles mirror
+    FOR NON-NULL VECTORS.  Rows whose embedding is NULL are DROPPED,
+    by contract: a null vector has no nearest centroid, and parking it
+    on centroid 0 would skew that cell's occupancy (round-10 ADVICE:
+    divergence documented).  An existing ``centroid_id_col`` in the
+    corpus is overwritten; the output column takes the type of the
+    centroids' id column."""
     return routing_tree_assign(
         corpus, [centroids], [centroid_id_col],
-        id_col=id_col, vec_col=vec_col, spread=spread,
+        id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -309,7 +387,6 @@ def routing_tree_assign(
     level_id_cols: list[str],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    spread: bool = True,
 ) -> DataFrame:
     """L-level IVF routing tree (VERDICT r8 item 3 — the general form
     of two-level IVF ingest assignment): ``levels`` are centroid tables
@@ -324,89 +401,103 @@ def routing_tree_assign(
     coarse codebook still pays N x k1 dots with k1 itself linear in
     N — the measured N^1.5-ish floor. An L-level tree with branching
     b = k^(1/L) pays N * L * b dots: L=3 turns the corpus cost into
-    N^(4/3). The whole route is MAP-SIDE: each level's children are
-    pre-grouped into per-parent candidate ARRAYS (codebook-sized
-    ``collect_list`` builds, broadcast), a level is one broadcast
-    hash join on the parent cell id plus an in-row
-    ``transform``/``aggregate`` argmax over the candidate array —
-    the corpus pays ZERO exchanges end-to-end (the r9 rewrite of the
-    original per-level argmax aggregation, which shuffled the corpus
-    L+1 times and was the measured base-cost floor at small N).
-    Per-candidate dots are computed exactly once (scored via
-    ``transform``, THEN folded), and the fold's comparison order is
-    irrelevant: argmax under the total order (score desc, id asc)
-    over the same candidate set is order-independent, so results are
-    bit-identical to the aggregation form the oracle mirrors.
+    N^(4/3).  The level tables are codebook-sized: they are collected
+    once to the driver, and the whole route — every level — runs in
+    ONE Arrow-batched numpy pass over the corpus (``_assign_cells``),
+    which scores each vector only against its parent cell's children
+    (``_np_dot_scores``, the column ``dot``'s sequential fold bit for
+    bit) and picks under (score desc, id asc) — the order the
+    aggregation form the oracle mirrors uses.  The corpus pays ZERO
+    exchanges.
 
-    Transitive leaf ownership is enforced top-down: a level-i
-    centroid routes traffic only if some leaf centroid descends from
-    it (semi-filter chain), else vectors routed into a childless cell
-    would vanish from the assignment (measured at 2.3% of the 100x
-    corpus under the earlier two-level router).
+    Transitive leaf ownership is enforced top-down, on the driver: a
+    level-i centroid routes traffic only if some leaf centroid
+    descends from it, else vectors routed into a childless cell would
+    vanish from the assignment (measured at 2.3% of the 100x corpus
+    under the earlier two-level router).
 
     Rows whose vector is NULL are dropped; the finest level's id
     column is added, or overwritten when the corpus already has it."""
+    import numpy as np
+
     if len(levels) != len(level_id_cols) or not levels:
         raise ValueError("levels and level_id_cols must match, non-empty")
-    # the whole route (every level's argmax fold) fuses into the
-    # corpus scan stage — spread a single-task sandbox scan so the
-    # route does not run on one core (r15; no-op at corpus scale;
-    # codebook-sized routing calls pass spread=False)
-    if spread:
-        from .skew import spread_small_scan
-
-        corpus = spread_small_scan(corpus)
+    tables = [_collect_cells(levels[0], level_id_cols[0], vec_col)]
+    for lvl, lid, par in zip(levels[1:], level_id_cols[1:], level_id_cols):
+        tables.append(_collect_cells(lvl, lid, vec_col, par))
     # transitive ownership, finest to coarsest
-    owned = list(levels)
-    for i in range(len(levels) - 2, -1, -1):
-        owned[i] = owned[i].join(
-            F.broadcast(
-                owned[i + 1].select(level_id_cols[i]).distinct()
-            ),
-            on=level_id_cols[i],
-            how="leftsemi",
+    for i in range(len(tables) - 2, -1, -1):
+        owned = np.isin(tables[i][0], tables[i + 1][2])
+        tables[i] = tuple(t[owned] for t in tables[i])
+    ids0, C0 = tables[0][:2]
+    # per level: parent cell id -> (child ids, child vectors)
+    children = [
+        {p: (ids[pars == p], C[pars == p]) for p in np.unique(pars)}
+        for ids, C, pars in tables[1:]
+    ]
+
+    def route(X):
+        cell = ids0[_np_top_cells(_np_dot_scores(X, C0), 1)[:, 0]]
+        for kids in children:
+            nxt = np.empty_like(cell)
+            for p in np.unique(cell):
+                rows = cell == p
+                ids, C = kids[p]
+                nxt[rows] = ids[
+                    _np_top_cells(_np_dot_scores(X[rows], C), 1)[:, 0]
+                ]
+            cell = nxt
+        return cell
+
+    if not len(ids0):  # no cell owns a leaf: nothing can be routed
+        corpus = corpus.limit(0)
+    from .skew import spread_small_scan
+
+    # the assigned corpus feeds per-row HOF work downstream (the IVF
+    # probes' cosine, pq_encode): spread a single-task sandbox scan so
+    # that work does not run on one core (a no-op at corpus scale)
+    return _assign_cells(
+        spread_small_scan(corpus), vec_col, level_id_cols[-1],
+        levels[-1].schema[level_id_cols[-1]], C0.shape[1], route,
+    )
+
+
+def _ivf_query_probes(
+    queries: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    vec_col: str,
+    query_id_col: str,
+    centroid_id_col: str,
+) -> DataFrame:
+    """The IVF probes of a bounded query set, selected DRIVER-SIDE (a
+    Spark pass would pay a crossJoin and a window for a handful of
+    rows): each query's ``nprobe`` best centroids by dot under (score
+    desc, cid asc).  Returns the broadcast probe rows
+    ``(query_id_col, __qvec array<double>, centroid_id_col)``.  Queries
+    whose vector is not usable (``_np_valid``: NULL, not exactly
+    ``dims`` long, a NULL element) probe nothing, as in
+    ``_lsh_query_probes`` — such a query would otherwise come back
+    with NULL-cosine rows instead of being absent."""
+    cids, C = _collect_cells(centroids, centroid_id_col, vec_col)
+    qrows = queries.select(query_id_col, vec_col).collect()
+    keep, Q = _np_valid([r[1] for r in qrows], C.shape[1])
+    qids = [r[0] for r, k in zip(qrows, keep) if k]
+    top = _np_top_cells(_np_dot_scores(Q, C), int(nprobe))
+    rows = [
+        (qid, [float(x) for x in qv], int(cids[j]))
+        for qid, qv, js in zip(qids, Q, top)
+        for j in js
+    ]
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    cid_type = centroids.schema[centroid_id_col].dataType.simpleString()
+    return F.broadcast(
+        queries.sparkSession.createDataFrame(
+            rows,
+            f"`{query_id_col}` {qid_type}, __qvec array<double>, "
+            f"`{centroid_id_col}` {cid_type}",
         )
-    out = corpus
-    for i, (lvl, lid) in enumerate(zip(owned, level_id_cols)):
-        child = F.struct(
-            F.col(lid).alias("i"), F.col(vec_col).alias("v")
-        )
-        if i == 0:
-            cands = lvl.agg(F.collect_list(child).alias("__cands"))
-            j = out.crossJoin(F.broadcast(cands))
-        else:
-            cands = lvl.groupBy(
-                F.col(level_id_cols[i - 1]).alias("__par")
-            ).agg(F.collect_list(child).alias("__cands"))
-            j = out.join(
-                F.broadcast(cands), out["__grp"] == cands["__par"]
-            ).drop("__par", "__grp")
-        v = F.col(vec_col)
-        scored = F.transform(
-            F.col("__cands"),
-            lambda c: F.struct(
-                dot(v, c["v"]).alias("s"), c["i"].alias("i")
-            ),
-        )
-        best = F.aggregate(
-            scored,
-            F.struct(
-                F.lit(float("-inf")).alias("s"),
-                F.lit(None).cast(lvl.schema[lid].dataType).alias("i"),
-            ),
-            lambda acc, c: F.when(
-                (c["s"] > acc["s"])
-                | ((c["s"] == acc["s"]) & (c["i"] < acc["i"])),
-                c,
-            ).otherwise(acc),
-        )
-        out = j.withColumn("__grp", best["i"]).drop("__cands")
-        if i == 0:
-            # a NULL vector keeps the fold's (-inf, null) seed: it has
-            # no cell and is dropped here; a vector routed at level 0
-            # always gets a cell from its parent's non-empty children
-            out = out.filter(F.col("__grp").isNotNull())
-    return out.withColumn(level_id_cols[-1], F.col("__grp")).drop("__grp")
+    )
 
 
 def ivf_topk(
@@ -422,40 +513,20 @@ def ivf_topk(
     partial_buckets: int = 32,
 ) -> DataFrame:
     """Approximate top-k: each query probes only its ``nprobe``
-    closest centroids' partitions — the corpus side can be partitioned
-    by cid on disk, so a probe is a partition-pruned scan at scale.
+    closest centroids' partitions (``_ivf_query_probes``) — the corpus
+    side can be partitioned by cid on disk, so a probe is a
+    partition-pruned scan at scale.
 
     The final reduction is the same two-stage partial top-k as
     ``brute_force_topk`` (per-(query, id-bucket) k-best, then merge):
     a hot probed partition never funnels its whole candidate list
     through one reducer."""
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("__cid"), F.col(vec_col).alias("__cvec")
-        )
+    probes = _ivf_query_probes(
+        queries, centroids, nprobe, vec_col, query_id_col, centroid_id_col
     )
-    qprobe = (
-        queries.crossJoin(c)
-        .select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            F.col("__cid"),
-            dot(F.col(vec_col), F.col("__cvec")).alias("__score"),
-        )
-        .withColumn(
-            "__rank",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
-                    F.desc("__score"), "__cid"
-                )
-            ),
-        )
-        .filter(F.col("__rank") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("__cid").alias(centroid_id_col))
+    cand = corpus_assigned.join(probes, on=centroid_id_col).filter(
+        F.col(id_col) != F.col(query_id_col)
     )
-    cand = corpus_assigned.join(
-        F.broadcast(qprobe), on=centroid_id_col
-    ).filter(F.col(id_col) != F.col(query_id_col))
     scored = cand.select(
         query_id_col,
         F.col(id_col),
@@ -525,9 +596,8 @@ def kmeans_parallel_seeds(
     for rnd in range(n_rounds):
         rounds_run = rnd + 1
         C = np.asarray(cand, dtype=np.float64)
-        cc_self = _np_self_scores(C, score_scale)
 
-        def d2_batches(batches, C=C, cc_self=cc_self):
+        def d2_batches(batches, C=C):
             import pandas as pd
 
             for pdf in batches:
@@ -536,9 +606,7 @@ def kmeans_parallel_seeds(
                 X = np.stack(
                     [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
                 )
-                smax = (
-                    2 * _np_quantized_scores(X, C, score_scale) - cc_self
-                ).max(axis=1)
+                smax = _np_l2_scores(X, C, score_scale).max(axis=1)
                 d2q = _np_self_scores(X, score_scale) - smax
                 yield pd.DataFrame(
                     {id_col: pdf[id_col], vec_col: pdf[vec_col], "__d2q": d2q}
@@ -582,8 +650,7 @@ def kmeans_parallel_seeds(
         list(enumerate(cand)), f"cid int, {vec_col} array<double>"
     )
     wrows = (
-        kmeans_assign(src, cdf, id_col=id_col, vec_col=vec_col,
-                      score_scale=score_scale)
+        kmeans_assign(src, cdf, vec_col=vec_col, score_scale=score_scale)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()
@@ -686,7 +753,7 @@ def kmeans_fit(
         # kmeans_assign scores argmax(2*x.c - |c|^2) — exact-integer L2
         assigned = kmeans_assign(
             corpus.select(id_col, vec_col), cdf,
-            id_col=id_col, vec_col=vec_col, score_scale=score_scale,
+            vec_col=vec_col, score_scale=score_scale,
         )
         upd = {
             (r["cid"], r["dim"]): (r["sum_q"], r["n"])
@@ -1174,30 +1241,11 @@ def ivf_pq_topk(
             F.col(centroid_id_col),
             pq_encode(F.col(vec_col), dims, m_sub, k_codes).alias("__codes"),
         )
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("__cid"),
-            F.col(vec_col).alias("__cvec"),
-        )
-    )
-    qprobe = (
-        queries.crossJoin(c)
-        .select(
-            F.col(query_id_col),
-            pq_query_lut(F.col(vec_col), dims, m_sub, k_codes).alias("__lut"),
-            F.col("__cid"),
-            dot(F.col(vec_col), F.col("__cvec")).alias("__score"),
-        )
-        .withColumn(
-            "__rank",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
-                    F.desc("__score"), "__cid"
-                )
-            ),
-        )
-        .filter(F.col("__rank") <= nprobe)
-        .select(query_id_col, "__lut", F.col("__cid").alias(centroid_id_col))
+    qprobe = _ivf_query_probes(
+        queries, centroids, nprobe, vec_col, query_id_col, centroid_id_col
+    ).select(
+        query_id_col, centroid_id_col,
+        pq_query_lut(F.col("__qvec"), dims, m_sub, k_codes).alias("__lut"),
     )
     cand = enc.join(F.broadcast(qprobe), on=centroid_id_col).filter(
         F.col(id_col) != F.col(query_id_col)

@@ -388,16 +388,11 @@ def _write_pq_model(
     w: list,
     books: list,
     centroids: list | None = None,
-    residual: bool | None = None,
 ) -> None:
     """Persist the trained model as one model-sized parquet file:
     rotation rows (kind='rotation', m=component), codebook rows
     (kind='codebook', m=subspace, c=code), and — for the IVF-pruned
-    layout — coarse centroid rows (kind='centroid', m=cid) plus a
-    (kind='residual', m=0|1) flag recording whether the codes encode
-    x or x - centroid[cid]; the probe MUST honor it (a raw-coded
-    query LUT against residual codes answers with the wrong
-    geometry)."""
+    layout — coarse centroid rows (kind='centroid', m=cid)."""
     model_rows = [
         ("rotation", i, 0, [float(v) for v in row])
         for i, row in enumerate(w)
@@ -408,10 +403,7 @@ def _write_pq_model(
     ] + [
         ("centroid", int(cid), 0, [float(v) for v in vec])
         for cid, vec in (centroids or [])
-    ] + (
-        [("residual", int(bool(residual)), 0, [])]
-        if residual is not None else []
-    )
+    ]
     spark.createDataFrame(
         model_rows, "kind string, m int, c int, vec array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -659,7 +651,6 @@ def build_trained_ivf_pq_store(
     kmeans_iter: int = 4,
     train_stride: int | str = 1,
     train_rows_per_cell: int = 192,
-    residual: bool = False,
 ) -> str:
     """The IVF-PRUNED trained-PQ store — the production serving layout
     that closes the last corpus-linear ANN scan (round-12 VERDICT
@@ -745,48 +736,15 @@ def build_trained_ivf_pq_store(
         spark.createDataFrame(
             centroids, f"cid int, {vec_col} array<double>"
         ),
-        id_col=id_col, vec_col=vec_col,
+        vec_col=vec_col,
     )
-    if residual:
-        # RESIDUAL coding (the classic IVF-PQ composition): the
-        # codebook spends its k_codes^m_sub cells on x - centroid[cid]
-        # instead of x.  MEASURED OFF by default: on unit-normalized
-        # clustered corpora (cosine serving, the embedding-table
-        # shape) raw coding wins — 20k/100-cluster recall@20 at
-        # nprobe 8: raw 0.39 vs residual 0.35; 4k/20-cluster: raw
-        # 0.82 vs residual 0.74 (SCALE.md wave 17).  Normalization
-        # leaves the residual as large as the vector itself, so the
-        # residual codebook buys no precision and loses the global
-        # comparability raw codes have.  The option stays for
-        # UN-normalized corpora where centers carry most of the
-        # energy — the regime the residual trick is for.  One
-        # broadcast join + a zip_with subtraction, map-side.
-        cb = F.broadcast(
-            spark.createDataFrame(
-                centroids, "cid int, __cvec array<double>"
-            )
-        )
-        enc_input = assigned.join(cb, on="cid").select(
-            F.col(id_col),
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.col("__cvec"),
-                lambda x, y: x - y,
-            ).alias(vec_col),
-            "cid",
-        )
-    else:
-        enc_input = assigned.select(id_col, vec_col, "cid")
-    # OPQ rotation + codebooks trained on what the store ENCODES
-    # (residuals in residual mode) — training on raw vectors and
-    # encoding residuals would hand the codebook the wrong geometry
     w, books = _train_pq_model(
-        enc_input, dims, m_sub=m_sub, k_codes=k_codes, id_col=id_col,
+        assigned, dims, m_sub=m_sub, k_codes=k_codes, id_col=id_col,
         vec_col=vec_col, quant_scale=quant_scale, max_iter=max_iter,
         train_stride=train_stride,
     )
     codes = pq_encode_trained_batch(
-        enc_input, w, books, id_col=id_col, vec_col=vec_col,
+        assigned, w, books, id_col=id_col, vec_col=vec_col,
         passthrough=("cid",),
     )
     (
@@ -804,10 +762,7 @@ def build_trained_ivf_pq_store(
         .partitionBy("cid")
         .parquet(path.rstrip("/") + "/vectors")
     )
-    _write_pq_model(
-        spark, path, w, books, centroids=centroids,
-        residual=residual,
-    )
+    _write_pq_model(spark, path, w, books, centroids=centroids)
     return path
 
 
@@ -825,13 +780,19 @@ def ensure_trained_ivf_pq_store(
 
 def read_trained_ivf_pq_model(
     spark: SparkSession, path: str
-) -> tuple[list, list, list, bool]:
-    """(rotation, codebooks, centroids, residual) from the store's
-    model file — centroids as (cid, vec) pairs sorted by cid, all
-    driver-side model-sized lists ready to re-embed as plan
-    literals.  ``residual`` defaults False for stores written before
-    the flag existed (their codes encode raw vectors)."""
+) -> tuple[list, list, list]:
+    """(rotation, codebooks, centroids) from the store's model file —
+    centroids as (cid, vec) pairs sorted by cid, all driver-side
+    model-sized lists ready to re-embed as plan literals.  A store
+    whose codes encode residuals x - centroid[cid] (a ``residual`` row
+    with m=1, written by earlier builds) is REJECTED: a raw-coded
+    query LUT against it answers with the wrong geometry."""
     rows = spark.read.parquet(path.rstrip("/") + "/model").collect()
+    if any(r["kind"] == "residual" and r["m"] == 1 for r in rows):
+        raise ValueError(
+            f"store at {path} holds residual codes, which are no longer "
+            "supported — rebuild it with build_trained_ivf_pq_store"
+        )
     rot = sorted(
         (int(r["m"]), [float(v) for v in r["vec"]])
         for r in rows if r["kind"] == "rotation"
@@ -852,10 +813,7 @@ def read_trained_ivf_pq_model(
             f"store at {path} carries no coarse centroids — built by "
             "build_trained_pq_store? probe it with trained_pq_topk"
         )
-    residual = any(
-        r["kind"] == "residual" and int(r["m"]) == 1 for r in rows
-    )
-    return [v for _, v in rot], books, cents, residual
+    return [v for _, v in rot], books, cents
 
 
 def upsert_trained_ivf_pq(
@@ -872,10 +830,9 @@ def upsert_trained_ivf_pq(
         (kmeans_assign — bit-identical to the build's
         partitioning, so an upserted vector lands exactly where a
         rebuild under the SAME centroids would put it);
-      - encode with the PERSISTED rotation + codebooks, honoring the
-        store's residual flag (encoding under a retrained model would
-        mix geometries in one store — the upsert_trained_pq
-        contract);
+      - encode with the PERSISTED rotation + codebooks (encoding
+        under a retrained model would mix geometries in one store —
+        the upsert_trained_pq contract);
       - LATEST-WINS rewrite of the touched cid partitions on BOTH
         tiers.  Touched = the batch's new cells UNION the batch ids'
         OLD cells, located by one column-pruned (id, cid) scan of the
@@ -906,12 +863,9 @@ def upsert_trained_ivf_pq(
         pq_encode_trained_batch,
     )
 
-    w, books, cents, residual = read_trained_ivf_pq_model(spark, path)
+    w, books, cents = read_trained_ivf_pq_model(spark, path)
     base = path.rstrip("/")
     codes_path, vec_path = f"{base}/codes", f"{base}/vectors"
-    src = batch.select(id_col, vec_col).filter(
-        F.col(vec_col).isNotNull()
-    )
     cdf = spark.createDataFrame(
         [(c, v) for c, v in cents], f"cid int, {vec_col} array<double>"
     )
@@ -919,31 +873,14 @@ def upsert_trained_ivf_pq(
     # vectors-tier rewrite, and the encode input — and the rewrites
     # below REPLACE files a lazy plan would re-read
     assigned = kmeans_assign(
-        src, cdf, id_col=id_col, vec_col=vec_col,
+        batch.select(id_col, vec_col), cdf, vec_col=vec_col
     ).localCheckpoint()
     n_batch = assigned.count()
     if n_batch == 0:
         return {"upserted": 0, "touched_cids": [], "moved_ids": 0}
-    if residual:
-        cb = F.broadcast(
-            spark.createDataFrame(
-                [(c, v) for c, v in cents], "cid int, __cvec array<double>"
-            )
-        )
-        enc_input = assigned.join(cb, on="cid").select(
-            F.col(id_col),
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.col("__cvec"),
-                lambda x, y: x - y,
-            ).alias(vec_col),
-            "cid",
-        )
-    else:
-        enc_input = assigned.select(id_col, vec_col, "cid")
     enc = pq_encode_trained_batch(
-        enc_input, w, books, id_col=id_col, vec_col=vec_col,
-        passthrough=("cid",),
+        assigned.select(id_col, vec_col, "cid"), w, books,
+        id_col=id_col, vec_col=vec_col, passthrough=("cid",),
     )
     new_cells = {
         int(r["cid"])
@@ -1050,33 +987,38 @@ def trained_ivf_pq_rerank_topk(
     PQ quantization error decides the SHORTLIST, never the final
     ranking; recall lost to pruning is the nprobe dial (measured on
     the clustered corpus in tests/test_round13_trained_ivf_pq.py and
-    SCALE.md wave 17).  Residual-coded stores (the default build)
-    get a PER-CELL query LUT over rotate(q - centroid[cell]) — the
-    probe honors the store's persisted residual flag either way.
+    SCALE.md wave 17).
 
     The query side is collected ONCE (probe-request-sized by
     contract — the same bound the broadcast already assumes) and the
     centroid ranking computed driver-side against the model-sized
     centroid table with kmeans_assign's own numpy kernels
     (_np_quantized_scores: the per-dim floor(x*y*scale + 0.5) integer
-    form the kmeans_update_step oracle SQL evaluates), so probe
-    selection is bit-identical to the store's partitioning and the
-    whole probe costs one collect job up front instead of a
-    crossJoin + window + collect chain per call."""
+    form the kmeans_update_step oracle SQL evaluates, and its
+    ``_np_top_cells`` order), so probe selection is bit-identical to
+    the store's partitioning and the whole probe costs one collect
+    job up front instead of a crossJoin + window + collect chain per
+    call.  Queries whose vector is not usable (``_np_valid``) probe
+    nothing."""
     import numpy as np
 
     from ..operators.similarity import (
-        _np_quantized_scores,
-        _np_self_scores,
+        _np_l2_scores,
+        _np_top_cells,
+        _np_valid,
         cosine,
         pq_adc_distance,
         two_stage_topk,
     )
     from pyspark.sql import Window
 
-    w, books, cents, residual = read_trained_ivf_pq_model(spark, path)
+    w, books, cents = read_trained_ivf_pq_model(spark, path)
+    cids = np.asarray([c for c, _ in cents], dtype=np.int64)
+    cmat = np.asarray([v for _, v in cents], dtype=np.float64)
     q_schema = queries.select(query_id_col, vec_col).schema
     qrows = queries.select(query_id_col, vec_col).collect()
+    keep, qx = _np_valid([r[1] for r in qrows], cmat.shape[1])
+    qrows = [r for r, k in zip(qrows, keep) if k]
     if not qrows:
         empty = spark.createDataFrame([], q_schema)
         return empty.select(
@@ -1084,48 +1026,28 @@ def trained_ivf_pq_rerank_topk(
             F.lit(None).cast("long").alias(id_col),
             F.lit(None).cast("double").alias("cos"),
         )
-    cids = np.asarray([c for c, _ in cents], dtype=np.int64)
-    cmat = np.asarray([v for _, v in cents], dtype=np.float64)
     wnp = np.asarray(w, dtype=np.float64)
-    qx = np.stack(
-        [np.asarray(r[vec_col], dtype=np.float64) for r in qrows]
-    )
     # argmin L2 == argmax(2 q.c - |c|^2), every per-dim product
     # floored at score_scale — int64 sums through the same kernels
     # kmeans_assign partitioned the store with, not float64: a
     # float64 sum of floored products drifts from the
     # store's partitioning once |sum| exceeds 2^53, flipping near-tie
     # probe selection
-    qc = _np_quantized_scores(qx, cmat, score_scale)
-    cc = _np_self_scores(cmat, score_scale)
-    dq = 2 * qc - cc[None, :]
-    # ranking ties break to the smaller cid: lexsort on (-dq, cid)
-    order = np.lexsort((cids[None, :].repeat(len(qx), 0), -dq), axis=-1)
-    # per-(query, probed cell) ADC lookup table, computed DRIVER-SIDE
-    # in the same numpy double arithmetic the store's batch encode
-    # used: in residual mode each probed cell gets its OWN LUT over
-    # rotate(q - centroid[cell]) — the IVF-PQ residual contract; in
-    # raw mode every probed cell of a query shares one LUT.  The LUT
-    # ships as DATA (|queries| x nprobe rows of m_sub*k doubles), not
-    # as a plan expression: a column-form LUT re-embeds the m*k*sub
-    # codebook literal in the plan, and at 8-bit codebooks (k=256 ->
-    # 16k literals) codegen/planning dominated the probe (~16 s flat
-    # regardless of nprobe — wave 18; the SCALE.md pitfall-1 literal
-    # class).  The LUT is ``_pq_lut``, the same fold as
-    # trained_pq_topk's.
+    dq = _np_l2_scores(qx, cmat, score_scale)
+    # one ADC lookup table per query, shared by its probed cells,
+    # computed DRIVER-SIDE in the same numpy double arithmetic the
+    # store's batch encode used.  The LUT ships as DATA (|queries| x
+    # nprobe rows of m_sub*k doubles), not as a plan expression: a
+    # column-form LUT re-embeds the m*k*sub codebook literal in the
+    # plan, and at 8-bit codebooks (k=256 -> 16k literals)
+    # codegen/planning dominated the probe (~16 s flat regardless of
+    # nprobe — wave 18; the SCALE.md pitfall-1 literal class).  The
+    # LUT is ``_pq_lut``, the same fold as trained_pq_topk's.
     bnp = np.asarray(books, dtype=np.float64)  # (m_sub, k, sub)
-
     probe_rows = []
-    for r, row in zip(qrows, order):
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        shared = None if residual else _pq_lut(bnp, qv @ wnp.T)
-        for j in row[: int(nprobe)]:
-            lut_vals = (
-                _pq_lut(bnp, (qv - cmat[j]) @ wnp.T) if residual else shared
-            )
-            probe_rows.append(
-                (r[query_id_col], int(cids[j]), lut_vals)
-            )
+    for r, top in zip(qrows, _np_top_cells(dq, int(nprobe))):
+        lut = _pq_lut(bnp, np.asarray(r[vec_col], dtype=np.float64) @ wnp.T)
+        probe_rows += [(r[query_id_col], int(cids[j]), lut) for j in top]
     probed_cids = sorted({c for _, c, _ in probe_rows})
     # the probed-cid union is bounded by min(|queries| x nprobe,
     # n_centroids) — literal ints that turn BOTH store scans into
@@ -1135,19 +1057,8 @@ def trained_ivf_pq_rerank_topk(
     probe = F.broadcast(
         spark.createDataFrame(
             probe_rows,
-            T.StructType(
-                [
-                    q_schema[0],
-                    T.StructField("cid", T.IntegerType()),
-                    T.StructField(
-                        "__lut", T.ArrayType(T.DoubleType())
-                    ),
-                ]
-            ),
-        ).select(
-            F.col(query_id_col).alias("__qid"),
-            "cid",
-            "__lut",
+            f"__qid {q_schema[0].dataType.simpleString()}, cid int, "
+            "__lut array<double>",
         )
     )
     codes = spark.read.parquet(path.rstrip("/") + "/codes").filter(

@@ -78,7 +78,12 @@ GUARDS = {
     # eagerly at build), so the physical shuffle count is unchanged
     # +1 spread; the textual count is 5
     "image_phash_pairs": (5, 0, 1),
-    "ivf_pq_rerank_top3": (11, 0, 6),
+    # re-pin 11 -> 4 Exchanges, 6 -> 3 broadcasts: ivf_assign's
+    # numpy pass replaced its BroadcastNestedLoopJoin (planned twice,
+    # the corpus feeds both the ADC tier and the rerank) and the
+    # driver-side probe selection replaced the query x centroid
+    # crossJoin + window
+    "ivf_pq_rerank_top3": (4, 0, 3),
     "incremental_components": (3, 0, 2),
     "lta_superquery_manifest": (6, 0, 3),
 }

@@ -325,12 +325,14 @@ def test_near_dedup_pipeline_plan(spark):
 
 
 def test_hierarchical_assign_plan(spark):
-    """Both codebook levels broadcast; the corpus shuffles only on
-    its own id for the argmax aggs."""
+    """The whole three-level route is ONE MapInArrow over the corpus
+    scan (the level tables are collected to the driver): no join of
+    any kind, and the only hash exchange is the final per-cell count
+    (the single-task sandbox scan is spread round-robin first)."""
     plan = _plan(spark, "hierarchical_assign_counts")
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Join" not in plan and "CartesianProduct" not in plan
 
 
 def test_visibility_windows_plan(spark):
@@ -438,11 +440,10 @@ def test_training_data_pipeline_plan(spark):
 
 
 def test_ivf_assign_zero_corpus_exchange(spark):
-    """The r9 map-side ivf_assign: the codebook collapses into ONE
-    broadcast candidate array and the argmax folds in-row, so the
+    """The map-side ivf_assign: the codebook is collected to the
+    driver and the argmax runs in one Arrow-batched pass, so the
     corpus pays ZERO exchanges — no hashpartitioning anywhere in the
-    plan (the only exchanges are the codebook's SinglePartition
-    collect_list and its broadcast)."""
+    plan."""
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
         ivf_assign,
     )
@@ -464,12 +465,10 @@ def test_ivf_assign_zero_corpus_exchange(spark):
 
 
 def test_routing_tree_zero_corpus_exchange(spark):
-    """The r9 routing_tree_assign: every level is a broadcast join on
-    the parent cell id + an in-row argmax over that parent's candidate
-    array. The only hash exchanges allowed are the CODEBOOK-side
-    per-parent collect_list groupings (they partition on parent ids);
-    a corpus-side shuffle would hash-partition on vec_id or the
-    routing column __grp — pin that it never appears."""
+    """The routing_tree_assign: every level routes inside one
+    Arrow-batched pass over the corpus, each vector scored only
+    against its parent cell's children.  A corpus-side shuffle would
+    hash-partition on vec_id — pin that it never appears."""
     from lofar_bf_pulsar_scripts_spark.operators.similarity import (
         ivf_assign,
         routing_tree_assign,

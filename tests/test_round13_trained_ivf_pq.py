@@ -155,6 +155,26 @@ def test_model_reader_rejects_flat_store(spark, store, tmp_path):
         read_trained_ivf_pq_model(spark, flat)
 
 
+def test_model_reader_rejects_residual_store(spark, tmp_path):
+    """A model whose ``residual`` row says 1 was coded as x -
+    centroid[cid]; the probe only builds raw LUTs, so reading it must
+    fail loudly instead of answering with the wrong geometry."""
+    path = str(tmp_path / "residual_store")
+    spark.createDataFrame(
+        [
+            ("rotation", 0, 0, [1.0, 0.0]),
+            ("rotation", 1, 0, [0.0, 1.0]),
+            ("codebook", 0, 0, [0.5]),
+            ("codebook", 1, 0, [0.5]),
+            ("centroid", 0, 0, [0.6, 0.8]),
+            ("residual", 1, 0, []),
+        ],
+        "kind string, m int, c int, vec array<double>",
+    ).write.parquet(path + "/model")
+    with pytest.raises(ValueError, match="residual"):
+        read_trained_ivf_pq_model(spark, path)
+
+
 def test_trained_pq_upsert_latest_wins(spark, tmp_path):
     """Round-12 ADVICE: re-upserting an id must leave exactly ONE
     code row at rest (latest wins), so trained_pq_topk's effective k

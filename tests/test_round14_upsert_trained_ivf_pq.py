@@ -80,14 +80,11 @@ def test_upsert_equals_full_encode_under_same_model(spark, upserted):
     rebuild retrains the model (centroid staleness, documented)."""
     full, path, report = upserted
     assert report["upserted"] == N - N_BASE
-    w, books, cents, residual = read_trained_ivf_pq_model(spark, path)
-    assert residual is False
+    w, books, cents = read_trained_ivf_pq_model(spark, path)
     cdf = spark.createDataFrame(
         [(c, v) for c, v in cents], "cid int, embedding array<double>"
     )
-    assigned = kmeans_assign(
-        full, cdf, id_col="vec_id", vec_col="embedding",
-    ).localCheckpoint()
+    assigned = kmeans_assign(full, cdf, vec_col="embedding").localCheckpoint()
     want_vecs = {
         (r["vec_id"], r["cid"])
         for r in assigned.select("vec_id", "cid").collect()
@@ -197,7 +194,7 @@ def test_latest_wins_when_ids_move_cells(spark, tmp_path_factory):
     assert _tier(spark, path, "codes").count() == 2000
     assert _tier(spark, path, "vectors").count() == 2000
     # new cells match a fresh assignment under the persisted model
-    w, books, cents, residual = read_trained_ivf_pq_model(spark, path)
+    w, books, cents = read_trained_ivf_pq_model(spark, path)
     cdf = spark.createDataFrame(
         [(c, v) for c, v in cents], "cid int, embedding array<double>"
     )

@@ -14,9 +14,10 @@ The scale factor is $SPARK_GRAFT_SF_DIR, as for time_queries.
 
 Each side's subprocesses run with TMPDIR inside that side's temporary
 directory, so the at-rest stores they build are removed with it on exit,
-after a failure or Ctrl-C too.  Each side therefore builds its stores
-once, in its first round: time_queries builds them (prebuild_stores)
-before its timed loop, which adds wall time but not measured time.
+after a failure or Ctrl-C too.  Each side therefore builds the stores
+its named queries probe once, in the first pass of its first round;
+that round's min over the remaining passes drops it, so the build adds
+wall time but not measured time.
 """
 
 from __future__ import annotations

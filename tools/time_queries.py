@@ -2,11 +2,13 @@
 
 Usage: python tools/time_queries.py [-nN] <query> [query ...]
 
-Same methodology as bench.py (warm stores via prebuild, one JVM warmup
-execution, noop sink, min over N passes — default 3) but only for the
-named queries, so an optimization loop gets a per-query read in
-seconds instead of a full 8-minute bench sweep.  Prints one line per
-query: ``<name> <min> s  (passes: t1 t2 ...)``.
+Same methodology as bench.py (one JVM warmup execution, noop sink, min
+over N passes — default 3) but only for the named queries, so an
+optimization loop gets a per-query read in seconds instead of a full
+8-minute bench sweep.  Stores are not prebuilt: a named query that
+probes a missing at-rest store builds it in its first pass, and the
+min over N passes drops that pass.  Prints one line per query:
+``<name> <min> s  (passes: t1 t2 ...)``.
 
 Times from separate runs also differ by host drift; to compare two
 commits, run ``tools/ab.py``, which alternates runs of this script
@@ -34,9 +36,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="time-queries")
     qs = queries()
-    from lofar_bf_pulsar_scripts_spark.registry import prebuild_stores
-
-    prebuild_stores(spark, sf_dir)
 
     def execute(df) -> None:
         df.write.format("noop").mode("overwrite").save()
